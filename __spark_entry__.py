@@ -33,8 +33,9 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2, ordered so
-    the driver's 50-query correctness window covers the queries that
-    have not yet received a green CORRECTNESS row (see Q._PRIORITY)."""
+    the driver's 50-query correctness window covers never-verified
+    queries first, then the least recently verified ones (see
+    Q.ordered_queries)."""
     return Q.ordered_queries()
 
 

@@ -182,13 +182,13 @@ LINE_BUDGET = 1900
 
 
 def env_probe() -> dict[str, bool]:
-    """Record whether the two env-gated code paths could execute in THIS
-    environment (r8 verdict #6): the delta-spark interchange adapter
-    (lakehouse/delta_adapter.py) and transformWithStateInPandas
-    (streaming/events.py, needs protobuf inside pyspark). Recorded in
-    every bench line so the round the sandbox gains these deps, the six
-    skipped parity tests flipping to passes needs no archaeology —
-    the flag flips in the same artifact."""
+    """Record whether two optional dependencies are importable in THIS
+    environment (r8 verdict #6): delta-spark (an external Delta reader
+    for the ``_delta_log`` mirror) and protobuf inside pyspark (needed by
+    transformWithStateInPandas, streaming/events.py).  Recorded in every
+    bench line so the round the sandbox gains these deps, the skipped
+    tests flipping to passes needs no archaeology — the flag flips in
+    the same artifact."""
     import importlib.util
 
     def _has(mod: str) -> bool:
@@ -215,14 +215,10 @@ def ratio_regressions(
     the bench's job is visibility; adjudicating a flagged ratio (plan
     regression vs fixture change vs documented rewrite) is review work.
 
-    Baseline selection excludes the CURRENT round's artifact (r9
-    advice): once the driver saves e.g. BENCH_r10.json, a naive
-    newest-file rule would compare round-10 reruns against themselves
-    and mask exactly the cross-round drift this gate exists to surface.
-    The current round comes from tests/dep_manifest.json's
-    ``baseline_round`` (stamped at round start), overridable via
-    ``SPARK_GRAFT_BENCH_BASELINE_ROUND`` (an explicit PRIOR round to
-    baseline against).
+    The baseline is the newest ``BENCH_r<N>.json`` beside this file
+    (per-host sidecars such as ``BENCH_r16_c8.json`` are not baselines);
+    ``SPARK_GRAFT_BENCH_BASELINE_ROUND=N`` pins the newest round <= N
+    instead.
 
     Returns ({name: [prev_ratio, cur_ratio]}, baseline_filename)."""
     import glob
@@ -231,40 +227,19 @@ def ratio_regressions(
     here = os.path.dirname(os.path.abspath(__file__))
 
     def _round_of(p: str) -> int | None:
-        # r11 advice: a stray glob hit without digits after the 'r'
-        # (BENCH_rerun.json) must be skipped, not crash the gate
-        m = re.search(r"r(\d+)", os.path.basename(p))
+        m = re.fullmatch(r"BENCH_r(\d+)\.json", os.path.basename(p))
         return int(m.group(1)) if m else None
 
-    explicit = os.environ.get("SPARK_GRAFT_BENCH_BASELINE_ROUND")
-    cur_round = None
-    if explicit is not None:
-        try:
-            cur_round = int(explicit) + 1  # baseline strictly at `explicit`
-        except ValueError:  # set-but-blank/garbage env: fail soft
-            cur_round = None
-    if cur_round is None:
-        try:
-            with open(os.path.join(here, "tests", "dep_manifest.json")) as fh:
-                cur_round = int(json.load(fh).get("baseline_round", 0))
-        except (OSError, ValueError):
-            cur_round = 0
-    if not cur_round:
-        # r11 advice: a missing baseline_round would silently revert to
-        # newest-file (self-comparison) — warn on stderr, never stdout
-        # (the recording driver parses stdout's final line)
-        print(
-            "bench: WARNING no baseline_round in tests/dep_manifest.json "
-            "and no SPARK_GRAFT_BENCH_BASELINE_ROUND — the current round's "
-            "own artifact is NOT excluded from baseline selection",
-            file=sys.stderr,
-        )
+    try:
+        pinned = int(os.environ.get("SPARK_GRAFT_BENCH_BASELINE_ROUND", ""))
+    except ValueError:  # unset, blank or garbage env: newest round
+        pinned = None
     rounds = sorted(
         (
             p
             for p in glob.glob(os.path.join(here, "BENCH_r*.json"))
             if _round_of(p) is not None
-            and (not cur_round or _round_of(p) < cur_round)
+            and (pinned is None or _round_of(p) <= pinned)
         ),
         key=_round_of,
     )
@@ -660,34 +635,12 @@ def remeasure_child(names: list[str], sf_dir: str) -> None:
     spark.stop()
 
 
-def _dep_unchanged(names: list[str]) -> list[str]:
-    """Subset of ``names`` whose full transitive core-module closure is
-    byte-identical to tests/dep_manifest.json — i.e. the structural
-    attestation says the flagged query's code did not change this
-    round, so its ratio flag is drift-suspect and worth an automated
-    re-measure.  A query with ANY drifted dependency keeps its flag
-    for human review (changed code plausibly explains it)."""
-    try:
-        here = os.path.dirname(os.path.abspath(__file__))
-        sys.path.insert(0, here)
-        from tools import dep_manifest as DM
-
-        drifted = set(DM.drift(DM.load_manifest(), DM.current_hashes()))
-        deps = DM.query_dependencies()
-        return [
-            n for n in names if n in deps and not (set(deps[n]) & drifted)
-        ]
-    except Exception:
-        return []
-
-
 def auto_remeasure(
     flagged: dict[str, list], sf_dir: str
 ) -> tuple[dict[str, list], dict[str, list], list[str]]:
-    """Automated flag adjudication (r12 verdict #5): every ratio flag
-    on a dep-manifest-attested-UNCHANGED query is re-measured in a
-    fresh subprocess (min-of-3 against its own fresh calibration)
-    before being recorded.  Returns (still_flagged,
+    """Automated flag adjudication (r12 verdict #5): the worst 8 ratio
+    flags are re-measured in a fresh subprocess (min-of-3 against its
+    own fresh calibration) before being recorded.  Returns (still_flagged,
     cleared_by_remeasure, skipped): a flag whose re-measured ratio is
     back inside the 1.5x envelope of the previous round's ratio moves
     to ``ratio_flags_cleared_by_remeasure`` with BOTH numbers
@@ -710,18 +663,15 @@ def auto_remeasure(
         "SPARK_GRAFT_BENCH_REMEASURE", "1"
     ) != "1":
         return flagged, {}, []
-    candidates = _dep_unchanged(sorted(flagged))
     # flagged queries are tier-1 (sub-second to a few sec); the child
     # cost is dominated by bring-up + warmup (~35 s) + 3*(cal+queries).
     # Cap the re-measured set at 8 worst flags to bound the child.
     candidates = sorted(
-        candidates,
+        flagged,
         key=lambda n: -max(
             flagged[n][0] / flagged[n][1], flagged[n][1] / flagged[n][0]
         ),
     )[:8]
-    if not candidates:
-        return flagged, {}, []
     try:
         proc = subprocess.run(
             [

@@ -4,11 +4,9 @@ next-round #5).
 The reference's core write path is delta-spark MERGE
 (``/root/reference/jobs/order_glue_job.py:151-158``,
 ``requirements.txt:2``) whose output any external Delta client can
-read.  This container has no delta-spark (every install probe failed,
-commit 3be1111), so the interchange adapter
-(``lakehouse/delta_adapter.py``) has never executed.  This module
-closes the gap from the other side: it writes the Delta transaction
-log FORMAT directly — the log is plain JSON action lines
+read.  delta-spark is not a dependency of this engine, so this
+module closes the gap from the storage side: it writes the Delta
+transaction log FORMAT directly — the log is plain JSON action lines
 (protocol / metaData / add / remove / commitInfo, Delta PROTOCOL.md)
 — mirroring every LakeTable version into
 ``<table>/_delta_log/<version %020d>.json`` so an external Delta

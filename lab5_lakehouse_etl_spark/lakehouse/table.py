@@ -29,19 +29,23 @@ manifest's files are never mutated, only eventually vacuumed.
 
 SCALE BOUNDARIES (stated, not hidden):
 
-- **Interchange**: a LakeTable is NOT readable by Delta/Iceberg
-  clients — the version log is this module's own JSON, not the Delta
-  transaction protocol. Inside this engine the contract is identical
-  (MERGE/DELETE/OPTIMIZE/Z-order/CDF/time-travel), and the call sites
-  are isolated here, so swapping in delta-spark where it is available
-  is a storage-layer change, not a query change.
-- **Manifest residency**: each version's file list is one JSON
-  manifest read on the driver. That is exactly Delta's pre-checkpoint
-  design and holds comfortably to ~10^5 files per snapshot (a 100 TB
-  table at healthy 1 GB files is 10^5); beyond that the log needs
-  sharded/checkpointed manifests (what Delta checkpoints and Iceberg
-  manifest lists do). OPTIMIZE compaction is the lever that keeps
-  real tables under the ceiling.
+- **Interchange**: the version log is this module's own JSON, not the
+  Delta or Iceberg protocol, and every write goes through LakeTable.
+  External readers get a table through on-demand exports of the same
+  snapshots: ``delta_log.export_delta_log`` writes ``_delta_log/``
+  (protocol 1/2; refuses active deletion vectors and column mapping,
+  which that protocol cannot express) and
+  ``iceberg_meta.export_iceberg_metadata`` writes Iceberg v2
+  ``metadata/`` (deletion vectors become position-delete files).
+- **Manifest residency**: a snapshot of up to
+  ``SPARK_GRAFT_INLINE_FILES_MAX`` (20k) files keeps its file list and
+  per-file stats in the JSON manifest, read on the driver.  A bigger
+  snapshot commits as ``files_external``: the JSON stays an
+  O(metadata) commit token and the file list lives only in the parquet
+  stats checkpoint, which ``read`` and ``prune_files_distributed`` scan
+  without walking it as JSON (Delta's checkpoint design).  The
+  operational paths (merge carryover, clone, optimize) still hydrate
+  the full list on the driver.
 """
 
 from __future__ import annotations

@@ -64,7 +64,8 @@ def cast_permissive(df: DataFrame, types: Mapping[str, str]) -> DataFrame:
     return out
 
 
-def _not_null_all(cols: Iterable[str]) -> Column:
+def not_null_all(cols: Iterable[str]) -> Column:
+    """True where every column in ``cols`` is non-null (never NULL)."""
     pred = F.lit(True)
     for c in cols:
         pred = pred & F.col(c).isNotNull()
@@ -84,7 +85,7 @@ def split_valid_rejected(
     cached upstream plan.
     """
     required = list(required)
-    pred = _not_null_all(required)
+    pred = not_null_all(required)
     return df.filter(pred), df.filter(~pred)
 
 

@@ -68,22 +68,29 @@ def run_order_items(spark: SparkSession, zones: ZoneConfig) -> dict:
 
     projected = ops.project_intersection(raw, EXPECTED_COLUMNS)  # lenient policy
     typed = ops.cast_permissive(projected, CASTS)
-    # observe() accumulators replace four count() jobs (same rationale
-    # as pipelines/orders.py); Spark dedups the self-referenced
-    # CollectMetrics node inside the EXCEPT plan, so input_rows stays
-    # exact even though `typed` appears on both sides of the subtract
-    obs_input, obs_valid, obs_final, obs_rej = (
-        Observation() for _ in range(4)
-    )
-    typed = typed.observe(obs_input, F.count(F.lit(1)).alias("n"))
     valid, _ = ops.split_valid_rejected(typed, REQUIRED)
-    valid = valid.observe(obs_valid, F.count(F.lit(1)).alias("n"))
 
     # Reference computes rejects as typed.subtract(valid) — EXCEPT
-    # DISTINCT, so duplicate rejected rows collapse (§2.12).
-    rejected = ops.except_rows(typed, valid).observe(
-        obs_rej, F.count(F.lit(1)).alias("n")
+    # DISTINCT, so duplicate rejected rows collapse (§2.12).  Validity
+    # is a function of the row, so that is exactly the distinct rows
+    # failing REQUIRED: ONE aggregate of typed grouped with its validity
+    # flag, instead of a two-sided anti join.  The input/valid/rejected
+    # counts ride one observe() ABOVE that aggregate, in place of three
+    # count() jobs: an observe() below it never reports on a clean batch,
+    # because AQE replaces the empty reject stage (and every
+    # CollectMetrics node inside it) with an empty relation.
+    obs_split, obs_final = Observation(), Observation()
+    groups = (
+        typed.groupBy(*typed.columns, ops.not_null_all(REQUIRED).alias("__ok"))
+        .agg(F.count(F.lit(1)).alias("__n"))
+        .observe(
+            obs_split,
+            F.coalesce(F.sum("__n"), F.lit(0)).alias("input"),
+            F.coalesce(F.sum(F.when(F.col("__ok"), F.col("__n"))), F.lit(0)).alias("valid"),
+            F.count_if(~F.col("__ok")).alias("rejected"),
+        )
     )
+    rejected = groups.filter(~F.col("__ok")).select(*typed.columns)
     writers.write_rejected_csv(rejected, os.path.join(zones.rejected, "order_items"))
 
     # HARD RI dependency: first run fails if orders is absent, exactly
@@ -106,17 +113,17 @@ def run_order_items(spark: SparkSession, zones: ZoneConfig) -> dict:
         latest_by="order_timestamp",
     )
 
+    split = obs_split.get
     metrics = {
         "job": "order_items",
-        "input_rows": obs_input.get["n"],
-        "valid_rows": obs_valid.get["n"],
+        "input_rows": split["input"],
+        "valid_rows": split["valid"],
         "deduplicated_rows": obs_final.get["n"],
-        "rejected_rows": obs_rej.get["n"],
+        "rejected_rows": split["rejected"],
     }
     writers.write_log_text(
         [f"{k}={v}" for k, v in metrics.items()],
         os.path.join(zones.logs, "order_items"),
-        spark,
     )
     for f in glob.glob(raw_glob):
         writers.archive_file(f, os.path.join(zones.archive, "order_items"))

@@ -113,7 +113,6 @@ def run_orders(spark: SparkSession, zones: ZoneConfig) -> dict:
     writers.write_log_text(
         [f"{k}={v}" for k, v in metrics.items()],
         os.path.join(zones.logs, "orders"),
-        spark,
     )
     for f in glob.glob(raw_glob):
         writers.archive_file(f, os.path.join(zones.archive, "orders"))

@@ -91,7 +91,6 @@ def run_products(spark: SparkSession, zones: ZoneConfig) -> dict:
     writers.write_log_text(
         [f"{k}={v}" for k, v in metrics.items()],
         os.path.join(zones.logs, "products"),
-        spark,
     )
     for f in glob.glob(raw_glob):
         writers.archive_file(f, os.path.join(zones.archive, "products"))

@@ -63,606 +63,11 @@ def load_all() -> None:
         importlib.import_module(f"{__name__}.{mod}")
 
 
-# The correctness driver verifies the first 50 queries in ``queries()``
-# order each round.  Rounds 1+2 produced 91 green rows; round 3's window
-# is the _R3 block below — the 50 highest-value oracle-paired queries
-# without a green row (including q_sessionize_batch's re-check after the
-# oracle-type fix and q_xlsx_ingest, which gained its oracle after its
-# r1 rows-only run).  The _R4 block holds the 5 deferred stream queries
-# so round 4's window is already correct with no further edits.
-_R3: tuple[str, ...] = (
-    # re-checks
-    "q_sessionize_batch", "q_xlsx_ingest",
-    # LLM-pipeline / corpus ops added in r2
-    "q_skew_salted_agg", "q_skew_salted_join", "q_vocab_topk",
-    "q_sql_tpch_q1", "q_table_changes", "q_semantic_search",
-    "q_text_chunk", "q_text_pii_mask", "q_dq_profile", "q_mv_incremental",
-    "q_decontaminate", "q_sample_stratified", "q_embed_quantize",
-    "q_outlier_mad", "q_histogram", "q_keyword_search", "q_pagerank",
-    "q_quality_gopher", "q_kmeans_embed",
-    "q_semdedup", "q_cluster_sample", "q_udaf_geomean", "q_udtf_tokens",
-    "q_cohort_retention", "q_ingest_dedup", "q_dup_spans",
-    "q_lm_unigram", "q_hybrid_search", "q_triangle_count", "q_dup_remove",
-    "q_event_debounce", "q_bin_equidepth", "q_range_join_binned",
-    "q_mixture_temperature", "q_kcore", "q_window_timerange",
-    "q_fn_variant", "q_arrow_l2norm",
-    # late TPC-H
-    "q_tpch_q4", "q_tpch_q8", "q_tpch_q9", "q_tpch_q13", "q_tpch_q16",
-    "q_tpch_q20", "q_tpch_q21", "q_tpch_q22",
-    # two streaming queries kept in r3 to validate the drain path early
-    "q_stream_tumbling", "q_stream_dedup_wm",
-)
-# round-4 remainder: the other oracle-paired streaming queries
-_R4: tuple[str, ...] = (
-    "q_stream_dedup", "q_stream_session", "q_stream_merge",
-    "q_stream_join", "q_stream_stateful",
-)
-_PRIORITY: tuple[str, ...] = _R3 + _R4 + (
-    # highest-priority RE-CHECK (tier-2 ordering only — never displaces
-    # an unverified query): q_sql_limit's r1 green predates the
-    # persistent-catalog rewrite it now reads through, and round 4's
-    # new declared queries pushed its natural re-check slot past the
-    # 50-query window
-    "q_sql_limit",
-    # TPC-H composites
-    "q_tpch_q3", "q_tpch_q5", "q_tpch_q6", "q_tpch_q7", "q_tpch_q10",
-    "q_tpch_q12", "q_tpch_q14", "q_tpch_q15", "q_tpch_q17", "q_tpch_q18",
-    "q_tpch_q19",
-    # reference end-to-end pipelines + lakehouse core semantics
-    "q_pipeline_orders", "q_pipeline_items", "q_pipeline_products",
-    "q_merge_upsert", "q_table_roundtrip", "q_bucketed_join",
-    # subqueries
-    "q_subquery_in", "q_subquery_exists", "q_subquery_notexists",
-    "q_subquery_scalar",
-    # scalar fn cut off at slot 51 in r1
-    "q_fn_struct",
-    # text analysis
-    "q_text_tokens", "q_text_quality", "q_text_langid", "q_fingerprint",
-    "q_text_tfidf", "q_langid_ngram",
-    # dedup family
-    "q_dedup_exact_docs", "q_dedup_minhash", "q_dedup_simhash",
-    "q_dedup_embedding", "q_dedup_ngram", "q_dedup_clusters",
-    # corpus ops
-    "q_split_hash", "q_pack_sequences", "q_mixture_weighted",
-    "q_corpus_curate",
-    # similarity search
-    "q_topk_similarity", "q_ann_lsh", "q_ann_ivf",
-    # multimodal
-    "q_multimodal_meta", "q_multimodal_features", "q_multimodal_frames",
-    "q_multimodal_resize",
-    # event analytics
-    "q_scd2_intervals", "q_funnel",
-    # batch windowed aggs (streaming_ops module, batch semantics)
-    "q_window_tumbling", "q_window_sliding",
-    # sketch invariant pair (array-output formulation retired in r7)
-    "q_sketch_quantile",
-)
-
-#: Queries whose implementation was REWRITTEN after their newest green
-#: driver row, mapped to the round the rewrite landed: they are treated
-#: as unverified (tier 1) until a green row from >= that round exists,
-#: then age normally.
-#:
-#: Round-7 entries, three groups:
-#: - the r6 drain re-expressions whose newest green rows are r3/r4
-#:   (q_stream_tumbling/session via foreachBatch -> LakeTable,
-#:   q_stream_merge via the external-manifest LakeTable internals);
-#: - the r7 algorithm rewrites: interval-island components
-#:   (q_dedup_clusters), bounded-sample trainers (q_ann_pq and the
-#:   kmeans family), O(n) recursion scans (q_ewma/q_holt_trend),
-#:   one-pass symmetric-difference verify (q_merge_upsert);
-#: - every drain-based streaming query, whose state partitioning
-#:   changed in r7 (streaming/events.py STATE_PARTITIONS).
-_REWRITTEN_IN: dict[str, int] = {
-    "q_stream_tumbling": 7,
-    "q_stream_session": 7,
-    "q_stream_merge": 7,
-    "q_dedup_clusters": 7,
-    "q_dedup_embedding": 7,
-    "q_ewma": 7,
-    "q_holt_trend": 7,
-    "q_merge_upsert": 7,
-    "q_stream_join": 7,
-    "q_stream_dedup": 7,
-    "q_stream_dedup_wm": 7,
-    "q_stream_stateful": 7,
-    "q_stream_multibatch": 7,
-    "q_stream_enrich": 7,
-    # Round-8 rewrites: seq_sq_dists replaces np.sum's pairwise
-    # reducer in every driver-side Lloyd trainer + pq_encode (bit-level
-    # distance change can flip near-tie argmins), and kmeans training/
-    # assignment became id-atomic with per-id dedup (CTE-twin duplicate
-    # semantics).
-    "q_kmeans_embed": 8,
-    "q_semdedup": 8,
-    "q_cluster_sample": 8,
-    "q_ann_pq": 8,
-    # r8: truth set switched from minhash candidates to the exhaustive
-    # prefix-filtered exact-Jaccard join (decouples the invariant from
-    # minhash banding recall).
-    # r8 truth-set switch (see below), then r9: simhash64 itself moved
-    # to the explicit whitespace class with the rest of the family.
-    # (r9 whitespace-class entry superseded by the r11 truth-artifact
-    # rework below)
-    # (r11 truth-artifact entry superseded by the r12 shared-helper
-    # consolidation below — functions/artifacts.ensure_lake_artifact)
-    "q_dedup_simhash": 12,
-    # r8: removal phase refactored onto the shared_gram_occurrences
-    # primitive introduced with q_dup_spans_var (entry superseded by
-    # the r10 whitespace-class bump below).
-    # r8: grouped-agg UDAFs moved from the legacy PandasUDFType
-    # spelling to type-hint-inferred eval type (same bodies; the eval
-    # path through the Arrow serializer is what changed).
-    "q_udaf_geomean": 8,
-    # Round-9 RETROACTIVE entries (r8 verdict finding: the hand-curated
-    # map missed these).  q_dedup_prefix's kernel was restructured r6/r7
-    # (8ed4601 materialized set relation, cce1c1c shingle-pass
-    # parallelization, 8031c17 verify-stage width, a17abd3 xxhash64
-    # collapse probe) after its r4 green row; the q_table_skipping pair
-    # reads through the r5 external-manifest/distributed-prune rework of
-    # lakehouse/table.py (and the e0c7451 temporal-skipping soundness
-    # fix) — their r4 rows certify code that no longer exists.
-    # (retroactive r6/r7 kernel restructure, then swept into the r9
-    # whitespace-class rewrite like the rest of the word_ngrams family)
-    "q_dedup_prefix": 9,
-    "q_table_skipping": 5,
-    "q_table_skipping_dist": 5,
-    # Round-9 rewrites: (a) the whole word_ngrams family moved from
-    # Java \s to the explicit [ \t\n\r\f] whitespace class (== RE2's
-    # \s — oracle-identical on any corpus, the q_text_normalize pin),
-    # which touches every query tokenizing through word_ngrams_sql or
-    # the chunk splitter — INCLUDING the minhash_band_index trio
-    # (index_store/epoch/stream_neardup, signatures over word bigrams)
-    # and q_dedup_prefix (word-3-gram elements), which the first cut of
-    # this block missed and a round-9 self-review caught;
-    # (b) containment_pairs gained the adaptive identical-set
-    # pre-collapse (sig/rep/expand).
-    "q_dedup_ngram": 9,
-    "q_dup_spans": 9,
-    "q_dedup_containment": 9,
-    "q_dedup_chunks": 9,
-    # (r9 entries superseded by the r11 hot-bucket cap in
-    # minhash_probe_index — values byte-identical at fixture scale,
-    # cap disengaged, but the probe code path changed)
-    "q_dedup_index_store": 11,
-    "q_dedup_epoch": 11,
-    # (q_stream_neardup's r9 entry superseded by the r10 gate rework
-    # below)
-    # r9 late: the exact-similarity kernels' shared set-relation /
-    # identical-set-collapse machinery was extracted into
-    # _distinct_set_relation/_identical_set_collapse (self-review #4);
-    # the router behind this query carries the restructured prefix
-    # branch even though fixtures route dense.
-    # (r9 helper-extraction entry superseded by the r11 truth-artifact
-    # rework: both consumers now read the build-once persisted exact
-    # pair relation — _ensure_char5_jaccard_truth in dedup_ops.py)
-    # (r11 entry superseded by the r12 shared-helper consolidation)
-    "q_dedup_jaccard_dense": 12,
-    # r9: banding parameters now derived from corpus statistics
-    # (minhash_params) — resolves to the identical (32, 8) at every
-    # fixture SF, but the code path (count + chooser) is new.
-    "q_dedup_minhash": 9,
-    # Round-10: the LAST engine-\s tokenization sites migrated to the
-    # explicit [ \t\n\r\f] whitespace class (functions/text.py tokens()
-    # + the three let-bound SQL templates incl. gopher_repetition_stats)
-    # — closing the r9 verdict's remaining cross-engine divergence
-    # family.  The explicit class IS RE2's \s, so the DuckDB oracles
-    # are untouched; on the [a-z0-9 ] fixtures values are provably
-    # identical, but the Java-side code path changed for every query
-    # that tokenizes through the legacy family, enumerated by
-    # function-level reference analysis (scan in the r10 commit
-    # message; the module-closure superset is recorded as the scoped
-    # manifest decision's out_of_scope list).
-    "q_corpus_curate": 10,
-    "q_dup_remove": 10,
-    "q_dup_spans_var": 10,
-    "q_fingerprint": 10,
-    "q_ingest_dedup": 10,
-    "q_ingest_epoch": 10,
-    "q_keyword_search": 10,
-    "q_lm_unigram": 10,
-    "q_pack_sequences": 10,
-    "q_pmi_cooccur": 10,
-    "q_ppl_buckets": 10,
-    "q_ppl_buckets_gk": 10,
-    "q_quality_gopher": 10,
-    "q_sample_stratified": 10,
-    "q_sketch_cms": 10,
-    "q_split_hash": 10,
-    "q_text_langid": 10,
-    "q_text_quality": 10,
-    "q_text_tfidf": 10,
-    "q_text_tokens": 10,
-    "q_vocab_topk": 10,
-    # r10: the UDTF demo's Python tokenizer moved from argless
-    # str.split() (Python \s: adds \x0B + unicode spaces) to the same
-    # explicit class — the one non-JVM member of the divergence family.
-    "q_udtf_tokens": 10,
-    # r10: the decontamination trio re-pointed at the build-once /
-    # probe-many persisted gram index (functions/decontaminate.py,
-    # r9 verdict next-round #5) — same values, new code path through
-    # ensure_gram_index + the shared probe primitives.
-    # (q_decontaminate's r9 whitespace-rewrite entry is superseded by
-    # this bump.)
-    # (r10 entries superseded by the r12 shared-helper consolidation
-    # — ensure_gram_index now delegates to ensure_lake_artifact)
-    "q_decontaminate": 12,
-    "q_decontaminate_spans": 12,
-    "q_stream_decontaminate": 12,
-    # r10 deep-review fixes: the streaming reject gates moved to
-    # replay-idempotent per-batch overwrite sinks (recursive readers),
-    # q_stream_neardup's verify side became corpus ∪ batch (a new doc
-    # absent from the static corpus no longer loses its candidates),
-    # and the skew demos' salt became a deterministic full-row hash
-    # (monotonically_increasing_id is unstable under stage
-    # recomputation — the SPARK-23207 silent-corruption class).
-    # r11: the neardup gate's verify side moved from arbitrary-survivor
-    # dropDuplicates to a deterministic corpus-wins left-anti union
-    # (r10 advice; identical values on the declared fixtures where
-    # overlap rows are identical, but the executed plan changed).
-    # "q_stream_neardup": 11,  # superseded by the r12 entry below
-    "q_skew_salted_agg": 10,
-    "q_skew_salted_join": 10,
-    # Round-11: the real PNG decode path (functions/png.py +
-    # multimodal.decode_image/png_media_from_ids/decode_image_stats) —
-    # new query, listed so the scoped dep-manifest decision can anchor
-    # on it; the other multimodal queries' functions are byte-identical
-    # (additive-only module edit, see the r11 manifest scope reason).
-    # ("q_multimodal_decode" r11 entry superseded by the r12 PNG-
-    # palette batch below)
-    # Round-11: new vendored Delta-log writer (lakehouse/delta_log.py)
-    # — new query anchoring the scoped manifest decision, like
-    # q_multimodal_decode above.
-    "q_table_delta_log": 11,
-    # Round-11 (second batch): the real WAV/Y4M codecs (functions/
-    # wav.py, functions/y4m.py) and the real nearest-neighbour resize
-    # (multimodal.resize_image_media) — new queries anchoring the
-    # scoped manifest decision; the multimodal.py edit is additive-only
-    # (every function the five pre-existing multimodal queries reach is
-    # byte-identical, recorded in the manifest scope reason).
-    # "q_multimodal_audio": 11,  # superseded by the r12 entry below
-    # (video/resize r11 entries superseded by the r12 ADVICE-fix
-    # batch below)
-    # Round-11 (third batch): pure Python/numpy baseline JPEG codec
-    # (functions/jpeg.py) + the decode_image JPEG dispatch branch.
-    # (jpeg/jpeg_color r11 entries superseded by the r12 subsampling
-    # batch below)
-    # Round-11 (fourth batch): content-level image dedup across
-    # encodings (png_variant_media_from_ids + pixel_fingerprints).
-    # (image_dedup/quarantine/features r11 entries superseded by the
-    # r12 PNG-palette batch below)
-    # Round-11 (fifth batch): decode-validate quarantine gate
-    # (corrupt_png_media_from_ids + decode_or_quarantine).
-    # Round-11 (sixth batch): YCbCr-4:4:4 color JPEG (jpeg.py
-    # multi-component encode/decode + _ycbcr_to_rgb).
-    # Round-11 (seventh batch): real histogram feature extraction
-    # (image_histogram_features).
-    # Round-12: functions/jpeg.py generalized to per-component
-    # sampling factors (4:2:0/4:2:2 decode, r11 verdict next-round
-    # #1).  The 4:4:4/grayscale outputs are byte-identical (all-ones
-    # factors degenerate to the old walk; pinned by the unchanged
-    # golden/property tests), but encode_jpeg and decode_jpeg were
-    # RESTRUCTURED (generic MCU walk, per-component planes, upsample
-    # stage), so both pre-existing JPEG queries re-verify.  The color
-    # query's ORACLE also changed semantically: literals now
-    # CAST(... AS DOUBLE) (r11 advice — DuckDB DECIMAL vs float64
-    # divergence on 36 of 256^3 triples), so its r11 green row
-    # certifies a different oracle text.
-    # "q_multimodal_jpeg": 12,  # superseded by the r13 entry below
-    # "q_multimodal_jpeg_color": 12,  # superseded by the r13 entry below
-    # Round-12: new 4:2:0 decode query — listed (like r11's new-query
-    # entries) so the scoped dep-manifest decision can anchor on it.
-    # "q_multimodal_jpeg420": 12,  # superseded by the r13 entry below
-    # Round-12 (second batch), the two r11 ADVICE contract fixes:
-    # decode_y4m now returns the colourspace and sample_video_stats
-    # derives plane sizes from it (C420 payloads previously mis-sliced
-    # chroma silently); resize_image_media re-encodes with the PNG
-    # color type matching the decoded channel count (non-RGB decodes
-    # previously crashed in encode_png).  Values identical on the
-    # declared C444/RGB fixtures, but both executed code paths
-    # changed.
-    "q_multimodal_video": 12,
-    # "q_multimodal_resize_real": 12,  # superseded by the r13 entry below
-    # Round-12 (third batch): PNG palette decode (color type 3,
-    # depths 1/2/4/8, PLTE/tRNS) — functions/png.py decode_png was
-    # restructured (stride/bpp split, palette expansion stage), and
-    # the q_image_dedup fixture now re-encodes odd copies as palette
-    # PNGs, so every query decoding PNGs through decode_png/
-    # decode_image re-verifies.
-    # "q_image_dedup": 12,  # superseded by the r13 entry below
-    # "q_multimodal_decode": 12,  # superseded by the r13 entry below
-    # "q_media_quarantine": 12,  # superseded by the r13 entry below
-    # "q_image_features": 12,  # superseded by the r13 entry below
-    # Round-12 (fourth batch): Iceberg spec-v2 metadata interchange —
-    # new modules lakehouse/avro.py + lakehouse/iceberg_meta.py,
-    # executed only by this new query (anchor for the scoped manifest
-    # decision, like q_table_delta_log in r11).
-    # "q_table_iceberg": 12,  # superseded by the r13 entry below
-    # Round-12 (fifth batch): the build-once scratch-artifact pattern
-    # consolidated into functions/artifacts.ensure_lake_artifact (r11
-    # verdict next-round #4).  Artifact paths, digests and persisted
-    # values are byte-compatible, but the executed build/read path of
-    # every consumer now goes through the shared helper:
-    # ensure_gram_index's consumers and the Jaccard-truth pair are
-    # bumped to 12 in place above; q_decontaminate_index is the one
-    # consumer with no earlier entry.
-    "q_decontaminate_index": 12,
-    # Round-12 (sixth batch): FLAC decode (r11 verdict next-round #8)
-    # — new module functions/flac.py (frame sync + CRC-8/16, UTF-8
-    # frame numbers, Rice partitions, FIXED/LPC predictors, stereo
-    # decorrelation, STREAMINFO md5 verify) plus a magic-byte
-    # decode_audio dispatcher in functions/multimodal.py.
-    # q_multimodal_audio's executed path changed (decode_wav call →
-    # decode_audio dispatch); the remaining multimodal queries are
-    # module-granularity invalidations of the multimodal.py edit
-    # (meta/resize were already r6-deferred window leaders, so their
-    # tier move is a no-op for window arithmetic).
-    "q_multimodal_flac": 12,
-    "q_multimodal_audio": 12,
-    "q_multimodal_features": 12,
-    "q_multimodal_frames": 12,
-    "q_multimodal_meta": 12,
-    "q_multimodal_resize": 12,
-    # Round-12 (seventh batch): q_stream_neardup cost-structure
-    # attribution (r11 verdict #7) — the query and
-    # streaming/events.stream_neardup_gate now record build/cap/drain
-    # wall+job splits into NEARDUP_PHASES (read by bench's isolated
-    # run; drain job budget pinned in tests/test_plans.py).  Scoped
-    # rewrite: the events.py edit is confined to stream_neardup_gate's
-    # body (plus the new read-only plans.job_count helper), which no
-    # other streaming query executes, so the module-granular closure's
-    # other members keep their rows (decision recorded in the
-    # dep-manifest audit trail).
-    "q_stream_neardup": 12,
-    # Round-12 (eighth batch): progressive (SOF2) JPEG decode — the
-    # r11 verdict "What's missing" #1's second half.  functions/
-    # jpeg.py gains the multi-scan coefficient-accumulating decode
-    # (_decode_prog_scan: DC first/refine, AC first/refine, EOB runs,
-    # correction bits), a vectorized final IDCT (_idct_plane), the
-    # encode_jpeg_progressive fixture encoder, and the decode tail
-    # factored into _assemble_pixels (shared with baseline, moved
-    # verbatim).  All JPEG-decoding queries were already bumped to 12
-    # above; this new query anchors the batch.
-    # "q_multimodal_jpeg_prog": 12,  # superseded by the r13 entry below
-    # Round-12 (ninth batch): modality-complete quarantine — the
-    # audio/video ingest-validation gate (corrupt_av_media_from_ids +
-    # decode_or_quarantine_av: WAV/FLAC/Y4M verdicts incl. a
-    # CRC-flipped FLAC and a truncated WAV), anchoring this new query.
-    "q_media_quarantine_av": 12,
-    # Round-12 (tenth batch): lossless WebP (VP8L) decode — new module
-    # functions/webp.py (prefix codes, code-length transmission, LZ77
-    # with the 120-entry distance map, color cache, all four transform
-    # inversions) + a decode_image dispatch arm; this new query
-    # anchors the batch (its fixture cycles every encoding shape
-    # under one closed-form oracle).
-    # "q_multimodal_webp": 12,  # superseded by the r13 entry below
-    # Round-12 (eleventh batch): GIF decode — new module
-    # functions/gif.py (variable-width LZW with the GIF growth
-    # convention, interlace, GIF89a transparency) + a decode_image
-    # dispatch arm; this new query anchors the batch.
-    # "q_multimodal_gif": 12,  # superseded by the r13 entry below
-    # Round-12 (twelfth batch): BMP decode — new module
-    # functions/bmp.py (uncompressed DIB: 8/24/32-bit, both row
-    # orders, stride padding, BGRX palette) + a dispatch arm.
-    # "q_multimodal_bmp": 12,  # superseded by the r13 entry below
-    # Round-13 (first batch): Iceberg position-delete export for
-    # DV-bearing tables (r12 verdict next-round #3) — iceberg_meta.py
-    # RESTRUCTURED on both sides: the export loop's manifest-list
-    # write became multi-row (data + optional delete manifest) and
-    # read_iceberg_snapshot gained the sequence-gated delete
-    # application, both executed by q_table_iceberg even on DV-free
-    # tables.  The new q_table_iceberg_dv anchors the batch.
-    # "q_table_iceberg": 13,  # superseded by the r14 entry below
-    # Round-13 (second batch): baseline TIFF decode (r12 verdict
-    # next-round #7) — new module functions/tiff.py (both byte
-    # orders, strips, TIFF-LZW with the early-change width
-    # convention pinned against Java ImageIO goldens, predictor 2,
-    # gray/RGB/palette) + a decode_image dispatch arm.  The new
-    # q_multimodal_tiff anchors the batch; decode_image's BODY
-    # changed (new magic branch + refusal message), so every query
-    # executing it re-verifies — the function-level consumer set is
-    # decode_image_stats / pixel_fingerprints /
-    # image_histogram_features / decode_or_quarantine /
-    # resize_image_media callers, enumerated by the scan in the r13
-    # commit message (meta/features/frames/resize/audio/video/flac
-    # and the AV gate do NOT reach decode_image and keep their rows).
-    "q_multimodal_decode": 13,
-    "q_multimodal_jpeg": 13,
-    "q_multimodal_jpeg_color": 13,
-    "q_multimodal_jpeg420": 13,
-    "q_multimodal_jpeg_prog": 13,
-    "q_multimodal_webp": 13,
-    "q_multimodal_gif": 13,
-    "q_multimodal_bmp": 13,
-    "q_multimodal_resize_real": 13,
-    "q_image_dedup": 13,
-    "q_image_features": 13,
-    # "q_media_quarantine": 13,  # superseded by the r14 entry below
-    # Round-13 (third batch): q_ann_recall_monitor phase attribution
-    # (r12 verdict next-round #4) — the query body gained the
-    # build/append/probe wall+job split (ANN_MONITOR_PHASES) read by
-    # bench's isolated run, with the job budgets pinned in
-    # tests/test_plans.py.  Scoped rewrite: the similarity_ops.py
-    # edit is confined to this query's body plus the new module-level
-    # dict, which no other query reads (decision recorded in the
-    # dep-manifest audit trail, same shape as r12's q_stream_neardup
-    # batch).  The two new r13 queries anchor their batches here:
-    "q_ann_recall_monitor": 13,
-    # "q_table_iceberg_dv": 13,  # superseded by the r14 entry below
-    # "q_multimodal_tiff": 13,  # superseded by the r14 entry below
-    # Round-13 (fourth batch): Iceberg column-mapping export — field
-    # ids re-keyed on PHYSICAL names + the schema.name-mapping.default
-    # property, reader resolves physical->logical through it.  New
-    # query anchor; the other two iceberg queries are already tier-1
-    # at 13 above (the reader/export both changed again).
-    # "q_table_iceberg_rename": 13,  # superseded by the r14 entry below
-    # Round-13 (fifth batch): per-column lower/upper bounds in every
-    # data_file manifest entry (Appendix-D single-value
-    # serialization from the LakeTable footer stats) + bounds-based
-    # file pruning in the reader.  New query anchor; the other
-    # iceberg queries stay tier-1 at 13.
-    # "q_table_iceberg_prune": 13,  # superseded by the r14 entry below
-    # Round-14 (first batch): TIFF 6.0 word alignment (r13 ADVICE) —
-    # _layout_page now pads odd-length strips and out-of-line tag
-    # blobs (and hence the IFD start) to even offsets.  Semantic
-    # change to the ENCODER only; decode is untouched and
-    # decode(encode(x)) == x still byte-exact (property tests).  The
-    # two queries that execute encode_tiff at query time re-verify:
-    # this one (value-identical by construction — outputs are decoded
-    # sample sums) and q_media_quarantine (its ids≡5 truncation cuts
-    # the last 20 bytes, still inside the trailing IFD since padding
-    # precedes the IFD and every page IFD is >= 2+12*8+4 bytes).  The
-    # other 19 flagged queries never reach encode_tiff; their
-    # multimodal.py dependency drift is docstring-only (scope
-    # decision recorded in the dep-manifest audit trail).
-    "q_multimodal_tiff": 14,
-    "q_media_quarantine": 14,
-    # Round-14 (second batch): Iceberg NON-IDENTITY partition
-    # transforms (r13 verdict next-round #3) — iceberg_meta.py
-    # restructured on both sides again: the exporter's schema build
-    # now excludes declared transform columns and verifies per-file
-    # partition claims against source footer bounds, the spec build
-    # emits transform strings with result-typed partition structs,
-    # and the reader gained transform-aware scan planning
-    # (_partition_disjoint) plus identity-only partition-value
-    # injection.  Every query reading through export/read re-verifies;
-    # the two new queries (q_table_iceberg_bucket, q_table_iceberg_time)
-    # anchor the batch as tier-1 unverified.
-    "q_table_iceberg": 14,
-    "q_table_iceberg_dv": 14,
-    "q_table_iceberg_rename": 14,
-    "q_table_iceberg_prune": 14,
-    # new r14 queries, listed (like r11/r12 new-query entries) so the
-    # scoped dep-manifest decisions can anchor on them:
-    # q_table_iceberg_bucket/time exercise the transform export,
-    # q_image_exif the new functions/exif.py over the multimodal
-    # fixture machinery
-    "q_table_iceberg_bucket": 14,
-    "q_table_iceberg_time": 14,
-    # (q_image_exif r14 entry superseded by the r15 ADVICE-fix
-    # entry below)
-    # orientation-normalized dedup (functions/exif.py transforms +
-    # oriented_fingerprints) — the EXIF machinery's declared use-case
-    "q_image_dedup_oriented": 14,
-    # nested struct/list/map schema export with element-level field
-    # ids (iceberg_meta._iceberg_type + reader inverse)
-    "q_table_iceberg_nested": 14,
-    # HTML -> text extraction (new module functions/html.py; Spark +
-    # DuckDB pattern builders side by side, cross-engine regex pin)
-    "q_text_html_extract": 14,
-    # URL canonicalization + URL-level dedup (new module
-    # functions/urls.py, same twin-builder shape; r14 entry
-    # superseded by the r15 name-boundary-fix entry below)
-    # Round-15: the four ADVICE fixes, scoped to their direct
-    # consumers (module closure is import noise — see the
-    # dep-manifest audit trail for the per-query justification):
-    # exif.py pointer-tag TypeError fix (advisory contract now holds
-    # for type-2/type-5 Exif/GPS pointer entries) — every query that
-    # calls extract_exif re-verifies,
-    "q_image_exif": 15,
-    "q_media_quarantine": 15,
-    "q_media_quarantine_av": 15,
-    # urls.py tracked-param name-boundary fix (delimiter doubling;
-    # '&fbclid_x=1' no longer corrupts neighbours) + the adversarial
-    # fixture arm in text_ops.py,
-    "q_url_canonicalize": 15,
-    # readers.py read_avro mixed-writer-schema guard (a divergent
-    # file in the glob now raises instead of half-reading),
-    "q_scan_avro": 15,
-    # new r15 queries, listed (r11/r12/r14 precedent) so scoped
-    # dep-manifest decisions over their core modules can anchor:
-    # q_image_dedup_phash rides the multimodal closure (dHash +
-    # banded Hamming machinery appended r15)
-    "q_image_dedup_phash": 15,
-    # q_scan_warc / q_pipeline_web read through the new
-    # sources/warc.py module and the read_warc reader
-    "q_scan_warc": 15,
-    "q_pipeline_web": 15,
-    # iceberg_meta tinyint/smallint spec-conform widening (the last
-    # primitive refusal closed): q_table_iceberg's fixture gained
-    # nk_i8/nk_i16 columns riding the round trip
-    "q_table_iceberg": 15,
-    # q_audio_dedup_fp / q_video_dedup_fp / q_dedup_lines ride the
-    # multimodal/dedup closures (energy-hash + temporal-hash +
-    # boilerplate machinery appended r15)
-    "q_audio_dedup_fp": 15,
-    "q_video_dedup_fp": 15,
-    "q_dedup_lines": 15,
-    # streaming WARC ingest gate (stream_warc_gate + the shared
-    # decode_warc_content factoring)
-    "q_stream_warc": 15,
-    # transitive-closure near-dup grouping (components closure over
-    # the banded matcher; chain fixture)
-    "q_image_dedup_chain": 15,
-    # Round-15 OPTIMIZATION phase (commits d0231a4..cfe2412) — the
-    # adjudication the r15 verdict flagged as missing ("What's wrong"
-    # #1).  Executed-plan changes, grouped by module:
-    # session.cluster_for_write (pinned writer parallelism) adopted at
-    # nine sites across six index-build queries, plus the
-    # q_dedup_epoch append-source band-index reuse (dedup_ops.py):
-    "q_dedup_index_store": 15,
-    "q_dedup_epoch": 15,
-    "q_ann_index_store": 15,
-    "q_ann_index_append": 15,
-    "q_ann_recall_monitor": 15,
-    "q_stream_neardup": 15,
-    # (q_kcore's r15 entry REMOVED in r16: the r15 lazy-checkpoint +
-    # early-exit k_core was reverted byte-identically to the form its
-    # newest green row (r12) certified, after a controlled A/B showed
-    # the eager fixed-round form fastest at sf0.1 — 1.717 s vs 1.906
-    # (r15 form) vs 1.793 (count-fold variant), min-of-3, one session
-    # — agreeing with the r15 driver bench's regression signal.  The
-    # restored bytes ARE the r12-verified code path, so the r12 row is
-    # evidence again; decision recorded in the dep-manifest audit
-    # trail.)
-    # NOT bumped, by reviewed decision (recorded in the dep-manifest
-    # audit trail): the other multimodal.py dependents
-    # (q_multimodal_decode/flac/gif/tiff/webp, q_image_features,
-    # q_image_dedup, q_multimodal_resize_real) reach only (a) the
-    # fixture fan-out rows_per_task retune — a partition-width knob
-    # over row-wise-pure mapInPandas builders, result-invariant by
-    # construction — and (b) the png/flac/webp kernel rewrites, which
-    # are byte-identical (differential + round-trip fuzz pinned in
-    # tests/test_png.py, test_flac.py, test_webp.py).  The
-    # hamming_fp_groups cache/collapse and graph.py changes do not
-    # reach them.  Bumping all eight would crowd the 50-slot driver
-    # window past the age-4 re-check reach
-    # (tests/test_registry.py::test_recency_debt_stays_within_window_reach).
-    # Round-16 OPTIMIZATION, batch 1: q_merge_upsert's dup-key guard
-    # overlapped with the staged write (table.py) + the n_rows /
-    # sym-diff single-pass fold (lakehouse_ops.py); q_stream_neardup's
-    # drain runs with AQE pinned off (events.py, 116 → 28 drain
-    # jobs); the ANN append/monitor share one bucketed corpus scan
-    # across create+append and the monitor collects all probe legs in
-    # one union plan (similarity_ops.py).  The other merge-executing
-    # queries are out of scope: their executed plan is byte-identical
-    # — only the guard job's SCHEDULE moved (see the manifest audit
-    # trail).
-    "q_merge_upsert": 16,
-    "q_stream_neardup": 16,
-    "q_ann_index_append": 16,
-    "q_ann_recall_monitor": 16,
-    # r16 batch 4: the two independent bucketed writes run
-    # concurrently (queries-layer change; window-neutral — the query
-    # was already an in-window age-5 re-check, it moves from a tier-2
-    # slot to a tier-1 slot)
-    "q_bucketed_join": 16,
-}
-# r9 window arithmetic: the three retroactive rewrites above are
-# tier-1 (unverified) and the remaining fourteen r4-era rows lead
-# tier 2 by age, so all seventeen stale r4 rows from the r8 verdict
-# land inside the 50-slot window as long as r9 adds fewer than ~30
-# new/rewritten queries.  Keep additions under that budget.
-
-
 def _driver_verified() -> dict[str, int]:
-    """Names with a SUCCESSFUL row in any past CORRECTNESS_r*.json,
-    mapped to the LATEST round number that verified them: hash-matched
-    against the oracle, or ran as a rows-only check while the query is
-    STILL rows-only.  A past ``no_oracle`` row does NOT shield a query
-    that has since gained an oracle (q_xlsx_ingest grew one after its
-    r1 rows-only run) — those must re-run for the real hash check.
-    Failed/erroring rows never count."""
+    """Names with a hash-matched row in any CORRECTNESS_r*.json, mapped
+    to the LATEST round that verified them.  Failed, erroring and
+    rows-only (``no_oracle``) rows never count: every declared query is
+    oracle-paired, so only a hash match is a verification."""
     import glob
     import json
     import os
@@ -682,63 +87,19 @@ def _driver_verified() -> dict[str, int]:
         except (OSError, ValueError):
             continue
         for name, rec in rows.items():
-            if not isinstance(rec, dict):
-                continue
-            if rec.get("hash_match") is True or (
-                rec.get("err") == "no_oracle"
-                # a row with no spark_rows is a crash wearing the
-                # no_oracle label, not a successful rows-only run
-                and rec.get("spark_rows") is not None
-                and name not in ORACLES
-            ):
+            if isinstance(rec, dict) and rec.get("hash_match") is True:
                 ok[name] = max(ok.get(name, 0), rnd)
-    # a rewrite after a green row invalidates that row: drop the query
-    # back to "unverified" until the driver re-checks the new code path
-    for name, rewritten_rnd in _REWRITTEN_IN.items():
-        if name in ok and ok[name] < rewritten_rnd:
-            del ok[name]
     return ok
 
 
 def ordered_queries() -> dict[str, QueryFn]:
-    """Registry reordered for the driver's 50-query correctness window,
-    three tiers:
-
-    1. unverified ORACLE-PAIRED queries (in _PRIORITY order, then
-       registration order) — each window slot buys a real hash check;
-    2. verified ORACLE-PAIRED queries, LEAST-recently-verified first
-       (stable by priority order within a round) — back-half slots
-       become re-checks of the oldest green rows, so code drift since a
-       query's last green round (e.g. q_sql_limit's r1 row predating
-       the persistent-catalog rewrite it now reads through) gets
-       caught;
-    3. NEVER-RUN rows-only queries (no oracle possible by design) get a
-       ONE-TIME promotion ahead of the re-check rotation: a first
-       ``no_oracle`` row is new signal ("does every declared query run
-       under the driver?"), worth one window slot each, exactly once.
-       The moment a query has any successful driver row it is
-       "verified" and falls through to tier 4 forever;
-    4. previously-run rows-only queries at the permanent tail: a
-       repeat ``no_oracle`` row is strictly less signal than any hash
-       re-check, so they never displace one.
-
-    Self-maintaining across rounds: each round's CORRECTNESS file
-    pushes its green queries into tier 2 and ages everything verified
-    earlier toward the window, so the window sweeps the whole registry
-    without manual reordering."""
-    base: list[str] = [n for n in _PRIORITY if n in QUERIES]
-    base += [n for n in QUERIES if n not in base]
+    """Registry reordered for the driver's 50-query correctness window:
+    never-verified queries first (registration order), then verified
+    ones, least recently verified first (registration order within a
+    round).  Each round's CORRECTNESS file rotates its green queries to
+    the back, so the window sweeps the whole registry with no manual
+    ordering."""
     verified = _driver_verified()
-    unverified = [n for n in base if n not in verified]
-    pos = {n: i for i, n in enumerate(base)}
-    by_age = sorted(
-        (n for n in verified if n in QUERIES),
-        key=lambda n: (verified[n], pos.get(n, len(pos))),
-    )
-    ordered = (
-        [n for n in unverified if n in ORACLES]
-        + [n for n in unverified if n not in ORACLES]  # one-time promotion
-        + [n for n in by_age if n in ORACLES]
-        + [n for n in by_age if n not in ORACLES]
-    )
+    # sorted() is stable, so ties keep registration order
+    ordered = sorted(QUERIES, key=lambda n: verified.get(n, -1))
     return {n: QUERIES[n] for n in ordered}

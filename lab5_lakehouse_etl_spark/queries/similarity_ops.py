@@ -973,6 +973,8 @@ def ann_probe_recall(
     + one exact top-k pass (2 small jobs); a production deployment
     runs it on a monitoring cadence over O(10) probes, not per query,
     and triggers per-cell re-centroiding / index rebuild on alarm."""
+    if not probe_ids:
+        return []
     out: list[tuple[int, float]] = []
     vec_by_id = {
         r.vec_id: [float(x) for x in r.embedding]

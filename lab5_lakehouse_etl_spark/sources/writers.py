@@ -26,15 +26,19 @@ def write_rejected_csv(df: DataFrame, path: str) -> None:
     df.write.mode("overwrite").option("header", True).csv(path)
 
 
-def write_log_text(lines: list[str], path: str, spark) -> None:
-    """S11/S12: run-metrics log as a single text file.
+def write_log_text(lines: list[str], path: str) -> None:
+    """S11/S12: run-metrics log as the single text file
+    ``path/part-00000``, replaced on each run.
 
     The reference does ``parallelize(...).coalesce(1).saveAsTextFile``
-    (jobs/order_glue_job.py:210) — an RDD detour we replace with a
-    1-column DataFrame write; coalesce(1) is correct here because a log
-    is inherently a single small file."""
-    df = spark.createDataFrame([(line,) for line in lines], "line STRING")
-    df.coalesce(1).write.mode("overwrite").text(path)
+    (jobs/order_glue_job.py:210), which lands the same one part file.
+    A handful of lines needs no Spark job: plain file I/O writes them
+    and an atomic rename replaces the previous run's log."""
+    os.makedirs(path, exist_ok=True)
+    tmp = os.path.join(path, ".part-00000.tmp")
+    with open(tmp, "w") as fh:
+        fh.writelines(f"{line}\n" for line in lines)
+    os.replace(tmp, os.path.join(path, "part-00000"))
 
 
 def archive_file(src: str, archive_dir: str, now: datetime | None = None) -> str:

@@ -356,3 +356,10 @@ def test_recall_monitor_detects_boundary_drift(spark, tmp_path):
     d_mean = sum(r for _, r in drifted) / len(drifted)
     assert h_mean == 1.0          # aligned clusters: perfect recall
     assert d_mean < 0.4           # drifted slice: alarm-level collapse
+
+
+def test_recall_monitor_no_probes_is_empty(spark):
+    from lab5_lakehouse_etl_spark.queries.similarity_ops import ann_probe_recall
+
+    corpus = spark.createDataFrame([(0, [1.0, 0.0])], "vec_id long, embedding array<float>")
+    assert ann_probe_recall(spark, corpus, {}, corpus, []) == []

@@ -10,6 +10,7 @@ parses back, and omissions are always declared, never silent."""
 from __future__ import annotations
 
 import json
+import os
 
 import bench
 
@@ -70,27 +71,30 @@ def test_line_budget_inside_driver_tail_window():
 
 
 def test_ratio_baseline_excludes_current_round(monkeypatch):
-    """r9 advice: once the driver saves the current round's
-    BENCH_r{N}.json, a newest-file baseline would compare same-round
-    reruns against themselves and mask the cross-round drift the gate
-    exists to surface. With baseline_round = N stamped in
-    tests/dep_manifest.json, the baseline must be a STRICTLY earlier
-    round even when the current round's artifact exists on disk."""
+    """The baseline is the newest round's BENCH_r<N>.json, never a
+    per-host sidecar (BENCH_r16_c8.json); an explicit
+    SPARK_GRAFT_BENCH_BASELINE_ROUND pins the newest round at or before
+    it, so a rerun inside round N can be compared against round N-1."""
+    import glob
     import re
 
-    import os
-
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    cur = json.load(
-        open(os.path.join(here, "tests", "dep_manifest.json"))
-    )["baseline_round"]
-    flagged, base = bench.ratio_regressions({}, 0.5)
-    if base is not None:
-        assert int(re.search(r"r(\d+)", base).group(1)) < cur
-    # explicit override pins the baseline round exactly
+    rounds = [
+        int(m.group(1))
+        for p in glob.glob(os.path.join(here, "BENCH_r*.json"))
+        if (m := re.fullmatch(r"BENCH_r(\d+)\.json", os.path.basename(p)))
+    ]
+    monkeypatch.delenv("SPARK_GRAFT_BENCH_BASELINE_ROUND", raising=False)
+    _f, base = bench.ratio_regressions({}, 0.5)
+    if rounds:
+        assert base == f"BENCH_r{max(rounds):02d}.json"
+    # an explicit override pins an existing round exactly
     monkeypatch.setenv("SPARK_GRAFT_BENCH_BASELINE_ROUND", "8")
     _f, base8 = bench.ratio_regressions({}, 0.5)
     assert base8 == "BENCH_r08.json"
+    # a blank override falls back to the newest round
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_BASELINE_ROUND", "")
+    assert bench.ratio_regressions({}, 0.5)[1] == base
 
 
 def test_main_loop_plumbing_signatures(monkeypatch):
@@ -107,5 +111,3 @@ def test_main_loop_plumbing_signatures(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_BENCH_ISOLATE", "0")
     out = bench.run_isolated("/root/testdata/sf0.001", 1e9)
     assert isinstance(out, tuple) and len(out) == 4
-    # _dep_unchanged never raises (fail-soft gate input)
-    assert isinstance(bench._dep_unchanged(["q_agg_groupby"]), list)

@@ -591,25 +591,6 @@ def test_stats_tolerate_unextractable_types(spark, tmp_path):
     assert t.read(spark, prune=[("price", ">=", 0)]).count() == 1
 
 
-def test_delta_flag_behavior(monkeypatch):
-    """The SPARK_GRAFT_DELTA interchange flag: off by default, and when
-    set in an environment without delta-spark it must fail loudly with
-    the install guidance — never silently fall back."""
-    from lab5_lakehouse_etl_spark.lakehouse import delta_adapter as DA
-
-    monkeypatch.delenv("SPARK_GRAFT_DELTA", raising=False)
-    assert DA.delta_requested() is False
-    monkeypatch.setenv("SPARK_GRAFT_DELTA", "1")
-    assert DA.delta_requested() is True
-    if DA.delta_available():  # pragma: no cover - not in this sandbox
-        assert DA.require_delta() is not None
-    else:
-        import pytest as _pytest
-
-        with _pytest.raises(ImportError, match="delta-spark"):
-            DA.require_delta()
-
-
 def test_distributed_pruning_matches_driver(spark, tmp_path):
     """prune_files_distributed (Spark job over the parquet stats
     checkpoint) must return exactly the driver loop's survivors for
@@ -1558,20 +1539,16 @@ def test_vacuum_spares_live_staging_with_stale_top_dir(spark, tmp_path):
 
 
 def test_delta_parity_version_retention_arithmetic(spark, tmp_path):
-    """Non-skipped structural pin of the arithmetic the (skip-guarded)
-    delta-adapter parity suite relies on (round-7 verdict item 2), so
-    the suite's asserts stay provably consistent with LakeTable
-    semantics even while delta-spark is absent:
+    """Version and retention arithmetic a Delta-style client reading a
+    LakeTable's history relies on:
 
     1. create -> merge -> delete is versions 0/1/2, and with the
        default retain_versions=2 the delete commit's vacuum physically
-       drops v0's files — the time-travel parity assert NEEDS
-       retain_versions=3 (exactly what test_delta_adapter.py:86 sets);
+       drops v0's files — time travel to v0 NEEDS retain_versions=3;
     2. after create -> merge, ``changes(from_version=1)`` diffs the
        v1 snapshot against itself (empty — NOT Delta's
        startingVersion=1, which replays the changes committed IN v1);
-       the equivalent diff is ``from_version=0``, which is what the
-       CDF parity assert uses.
+       the equivalent diff is ``from_version=0``.
     """
     from pyspark.sql import functions as F
 

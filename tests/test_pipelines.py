@@ -161,6 +161,34 @@ def test_run_all_end_to_end(spark, zones):
     assert all(m["validated_rows"] > 0 for m in metrics.values())
 
 
+def test_clean_items_batch_after_dirty_one(spark, zones):
+    """A clean batch has no rejects, so AQE empties the reject stage;
+    the run counts must still be exact, and the run log replaced."""
+    from lab5_lakehouse_etl_spark.pipelines.order_items import run_order_items
+
+    run_all(spark, zones)
+    clean = [
+        [str(200 + i), str(oid), "10", "3", "900", "1", "0",
+         "2025-04-06 10:00:00", "2025-04-06", "apr", "f3"]
+        for i, oid in enumerate([1, 2, 7, 1])
+    ]
+    _write_csv(os.path.join(zones.raw, "order_items", "items_clean.csv"), ITEMS_HEADER, clean)
+    m = run_order_items(spark, zones)
+    assert m == {
+        "job": "order_items",
+        "input_rows": 4,
+        "valid_rows": 4,
+        "deduplicated_rows": 4,
+        "rejected_rows": 0,
+    }
+    ids = sorted(r.id for r in LakeTable(zones.table_path("order_items")).read(spark).collect())
+    assert ids == [100, 101, 200, 201, 202, 203]
+    log_dir = os.path.join(zones.logs, "order_items")
+    assert os.listdir(log_dir) == ["part-00000"]
+    with open(os.path.join(log_dir, "part-00000")) as fh:
+        assert fh.read().splitlines() == [f"{k}={v}" for k, v in m.items()]
+
+
 def test_rerun_is_idempotent(spark, zones):
     run_all(spark, zones)
     orders_tbl = LakeTable(zones.table_path("orders"))

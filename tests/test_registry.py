@@ -26,26 +26,10 @@ def _write(path, name, rows):
         json.dump(rows, fh)
 
 
-def test_no_files_uses_priority_order(correctness_dir):
-    names = list(Q.ordered_queries())
-    # tier 1: oracle-paired _PRIORITY entries in order (rows-only
-    # entries sink to tier 2 — they can't buy a hash check)
-    paired_priority = [
-        n for n in Q._PRIORITY if n in Q.QUERIES and n in Q.ORACLES
-    ]
-    assert names[: len(paired_priority)] == paired_priority
-    assert sorted(names) == sorted(Q.QUERIES)
-
-
-@pytest.fixture()
-def synthetic_rows_only(monkeypatch):
-    """As of r7 every declared query is oracle-paired, so the tier-3/4
-    rows-only mechanics are exercised against a synthetic rows-only
-    query: temporarily strip the oracle from one registered name."""
-    target = sorted(Q.ORACLES)[0]
-    oracles = {n: s for n, s in Q.ORACLES.items() if n != target}
-    monkeypatch.setattr(Q, "ORACLES", oracles)
-    return target
+def test_no_files_uses_registration_order(correctness_dir):
+    # with no driver history every query is never-verified, so the
+    # order is plain registration order
+    assert list(Q.ordered_queries()) == list(Q.QUERIES)
 
 
 def test_all_declared_queries_oracle_paired():
@@ -56,33 +40,26 @@ def test_all_declared_queries_oracle_paired():
     assert set(Q.QUERIES) == set(Q.ORACLES)
 
 
-def test_unpaired_sink_behind_paired(correctness_dir, synthetic_rows_only):
-    names = list(Q.ordered_queries())
-    # the synthetic rows-only query has no driver row -> one-time
-    # promotion tier: behind every unverified PAIRED query
-    assert names.index(synthetic_rows_only) == len(Q.ORACLES)
-
-
 def test_verified_rotate_to_back(correctness_dir):
     all_names = list(Q.ordered_queries())
     front = all_names[:50]
-    # a round >= every _REWRITTEN_IN stamp, so no rewrite invalidation
-    # (a hardcoded r09 broke the moment round-10 stamps landed)
-    beyond = max(Q._REWRITTEN_IN.values()) + 1
     _write(
         correctness_dir,
-        f"CORRECTNESS_r{beyond:02d}.json",
+        "CORRECTNESS_r09.json",
         {n: {"hash_match": True} for n in front},
     )
     rotated = list(Q.ordered_queries())
-    # every name that was green moves behind every never-verified
-    # ORACLE-PAIRED name (rows-only names sit at the permanent tail,
-    # behind even the verified rotation — they can't buy a hash check)
-    n_unverified_paired = len(
-        [n for n in all_names if n in Q.ORACLES and n not in front]
-    )
-    assert set(rotated[:n_unverified_paired]).isdisjoint(front)
+    # every name that was green moves behind every never-verified name,
+    # in the same relative order
+    assert rotated[-50:] == front
     assert sorted(rotated) == sorted(all_names)
+    # an older green row is re-checked before a newer one
+    _write(
+        correctness_dir,
+        "CORRECTNESS_r10.json",
+        {n: {"hash_match": True} for n in all_names[50:]},
+    )
+    assert list(Q.ordered_queries())[:50] == front
 
 
 def test_failed_rows_rerun_up_front(correctness_dir):
@@ -97,101 +74,18 @@ def test_failed_rows_rerun_up_front(correctness_dir):
     assert list(Q.ordered_queries())[0] == target
 
 
-def test_rows_only_success_counts(correctness_dir, monkeypatch):
-    # a no_oracle row verifies a query that is STILL rows-only: of two
-    # rows-only queries, the one with a successful driver row drops to
-    # the permanent tail, behind the never-run one
-    ran, never_ran = sorted(Q.ORACLES)[:2]
-    monkeypatch.setattr(
-        Q,
-        "ORACLES",
-        {n: s for n, s in Q.ORACLES.items() if n not in (ran, never_ran)},
-    )
-    _write(
-        correctness_dir,
-        "CORRECTNESS_r09.json",
-        {ran: {"hash_match": None, "err": "no_oracle", "spark_rows": 7}},
-    )
-    names = list(Q.ordered_queries())
-    assert names[-1] == ran  # verified rows-only: permanent tail
-    assert names.index(never_ran) < names.index(ran)
-
-
-def test_erroring_no_oracle_row_does_not_verify(
-    correctness_dir, synthetic_rows_only
-):
+def test_erroring_no_oracle_row_does_not_verify(correctness_dir):
     """A crash wearing the no_oracle label (spark_rows absent — the
     exact shape q_sketch_quantile produced in r6 when the driver
     canonicalizer died on its array columns) must NOT count as a
-    successful rows-only run: the query keeps its promotion slot."""
-    target = synthetic_rows_only
-    before = list(Q.ordered_queries()).index(target)
+    verification: the query keeps its slot."""
+    target = list(Q.ordered_queries())[0]
     _write(
         correctness_dir,
         "CORRECTNESS_r05.json",
         {target: {"hash_match": None, "err": "no_oracle", "spark_rows": None}},
     )
-    assert list(Q.ordered_queries()).index(target) == before
-
-
-def test_never_run_rows_only_promoted_once(correctness_dir, synthetic_rows_only):
-    """A rows-only query with NO driver row ever outranks tier-2
-    re-checks exactly once; after its first ``no_oracle`` row it drops
-    to the permanent tail (q_ann_pq / q_sketch_* r6 promotion)."""
-    target = synthetic_rows_only
-    paired = sorted(Q.ORACLES)
-    # every oracle-paired query verified at a round >= every
-    # _REWRITTEN_IN stamp, so no rewrite invalidation; rows-only
-    # never run
-    beyond = max(Q._REWRITTEN_IN.values()) + 1
-    _write(
-        correctness_dir,
-        f"CORRECTNESS_r{beyond:02d}.json",
-        {n: {"hash_match": True} for n in paired},
-    )
-    names = list(Q.ordered_queries())
-    assert names[0] == target, (
-        "a never-run rows-only query must take the front slot when no "
-        "unverified oracle-paired query remains"
-    )
-    # after its first no_oracle row, it falls behind every re-check
-    _write(
-        correctness_dir,
-        f"CORRECTNESS_r{beyond + 1:02d}.json",
-        {target: {"hash_match": None, "err": "no_oracle", "spark_rows": 3}},
-    )
-    assert list(Q.ordered_queries())[-1] == target, (
-        "a once-run rows-only query must sit at the permanent tail"
-    )
-
-
-def test_rewritten_query_green_row_invalidated(correctness_dir):
-    """_REWRITTEN_IN drops green rows older than the rewrite round, so
-    the driver re-checks the new code path (r6 streaming drains)."""
-    target = sorted(Q._REWRITTEN_IN)[0]
-    stamp = Q._REWRITTEN_IN[target]
-    paired = sorted(Q.ORACLES)
-    _write(
-        correctness_dir,
-        f"CORRECTNESS_r{stamp - 1:02d}.json",
-        {n: {"hash_match": True} for n in paired},
-    )
-    names = list(Q.ordered_queries())
-    # every _REWRITTEN_IN query with a pre-rewrite green row leads the
-    # window; everything else is verified
-    stale = sorted(
-        n for n, r in Q._REWRITTEN_IN.items()
-        if r > stamp - 1 and n in Q.QUERIES
-    )
-    assert sorted(names[: len(stale)]) == stale
-    # a green row from the rewrite round itself re-verifies it
-    _write(
-        correctness_dir,
-        f"CORRECTNESS_r{stamp:02d}.json",
-        {target: {"hash_match": True}},
-    )
-    rotated = list(Q.ordered_queries())
-    assert rotated.index(target) > len(stale) - 1
+    assert list(Q.ordered_queries())[0] == target
 
 
 def test_stale_rows_only_run_does_not_shield_paired(correctness_dir):
@@ -205,6 +99,32 @@ def test_stale_rows_only_run_does_not_shield_paired(correctness_dir):
         {target: {"hash_match": None, "err": "no_oracle", "spark_rows": 7}},
     )
     assert list(Q.ordered_queries())[0] == target
+
+
+def test_window_replay_sweeps_registry(correctness_dir):
+    """Replay the committed CORRECTNESS history, then simulate rounds in
+    which the driver's 50-query window all turns green: every declared
+    query must enter a window within ceil(255 / 50) rounds."""
+    import glob
+    import math
+    import re
+    import shutil
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    newest = 0
+    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
+        shutil.copy(path, correctness_dir)
+        newest = max(newest, int(re.search(r"_r(\d+)\.json$", path).group(1)))
+    seen: set[str] = set()
+    for rnd in range(newest + 1, newest + 1 + math.ceil(len(Q.QUERIES) / 50)):
+        window = list(Q.ordered_queries())[:50]
+        seen.update(window)
+        _write(
+            correctness_dir,
+            f"CORRECTNESS_r{rnd:02d}.json",
+            {n: {"hash_match": True} for n in window},
+        )
+    assert seen == set(Q.QUERIES)
 
 
 def test_every_declared_query_documented():

@@ -11,7 +11,7 @@ from lab5_lakehouse_etl_spark.sources.readers import (
     passthrough_copy,
     split_workbook,
 )
-from lab5_lakehouse_etl_spark.sources.writers import archive_file
+from lab5_lakehouse_etl_spark.sources.writers import archive_file, write_log_text
 
 
 def test_split_workbook_sheet_csvs(tmp_path):
@@ -35,6 +35,15 @@ def test_archive_file_timestamp_suffix(tmp_path):
     assert os.path.basename(dst) == "orders_apr_2025_20250430_120005.csv"
     assert not src.exists()
     assert os.path.exists(dst)
+
+
+def test_write_log_text_single_file_replaced(tmp_path):
+    log_dir = str(tmp_path / "logs" / "orders")
+    write_log_text(["job=orders", "input_rows=7"], log_dir)
+    write_log_text(["job=orders", "input_rows=3", "rejected_rows=1"], log_dir)
+    assert os.listdir(log_dir) == ["part-00000"]
+    with open(os.path.join(log_dir, "part-00000")) as fh:
+        assert fh.read() == "job=orders\ninput_rows=3\nrejected_rows=1\n"
 
 
 def test_passthrough_copy(tmp_path):

@@ -7,7 +7,9 @@ Differences from tests/test_oracle.py (the pytest mirror): this uses a
 DEFAULT SparkSession (no tuned shuffle partitions — the driver's
 environment, where ANSI/session-tz assumptions get exercised), runs at
 the driver's sf0.01 by default, iterates in ordered_queries() order
-(so the 50-query round window is the sweep's prefix), and runs in ONE
+(never-verified, then least recently verified, per the committed
+CORRECTNESS files — so the 50-query round window is the sweep's
+prefix), and runs in ONE
 process so cross-query breakage (e.g. the round-3 DECIMAL footer-stats
 regression only q_mv_incremental exposed) surfaces.
 
