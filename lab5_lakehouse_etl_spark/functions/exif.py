@@ -577,11 +577,14 @@ def oriented_media_from_ids(
     orientation ``(id % 8) + 1`` via :func:`inverse_orientation`
     inside a lossless TIFF with the tag planted — lossless container
     REQUIRED: JPEG's per-orientation DCT loss would break the exact
-    normalized-fingerprint match."""
+    normalized-fingerprint match.  Fans out through
+    :func:`..session.spread` like the codec builders in
+    :mod:`.multimodal`; building the DataFrame runs no Spark job."""
     import numpy as np
     import pandas as pd
 
-    from .multimodal import MEDIA_SCHEMA, _id_partitioned
+    from ..session import spread
+    from .multimodal import MEDIA_SCHEMA
     from . import tiff
 
     W, H = 9, 6
@@ -615,7 +618,7 @@ def oriented_media_from_ids(
                 }
             )
 
-    return _id_partitioned(ids, id_col, rows_per_task=1000).mapInPandas(
+    return spread(ids.select(id_col), id_col).mapInPandas(
         batches, schema=MEDIA_SCHEMA
     )
 
@@ -653,12 +656,14 @@ def exif_media_from_ids(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
     query: TIFF+EXIF / JPEG+EXIF / PNG+eXIf / TIFF-plain per id —
     real containers through the real codecs, metadata planted by the
     writers above (which Java ImageIO demonstrably resolves — see
-    tests)."""
+    tests).  Fans out through :func:`..session.spread` like the codec
+    builders in :mod:`.multimodal`; building the DataFrame runs no
+    Spark job."""
     import pandas as pd
 
     from . import jpeg
+    from ..session import spread
     from .multimodal import MEDIA_SCHEMA, _fixture_png, _fixture_tiff
-    from .multimodal import _id_partitioned
 
     def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         for pdf in it:
@@ -693,7 +698,7 @@ def exif_media_from_ids(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 }
             )
 
-    return _id_partitioned(ids, id_col, rows_per_task=1000).mapInPandas(
+    return spread(ids.select(id_col), id_col).mapInPandas(
         batches, schema=MEDIA_SCHEMA
     )
 

@@ -28,9 +28,13 @@ plumbing is exercisable end-to-end without a model.
 
 Scale: payload columns are only materialized inside mapInPandas
 batches; metadata-only queries never touch the bytes (parquet column
-pruning drops the binary column at the scan); codec stages size their
-task fan-out by row count and codec weight (see
-:func:`_id_partitioned`), and payload bytes never cross a shuffle.
+pruning drops the binary column at the scan); payload bytes never
+cross a shuffle.  Codec builders fan out through ``session.spread``
+like any narrow map: ids hash-spread to ``defaultParallelism`` only
+when the scan has fewer partitions than cores, else the scan's splits
+are the codec parallelism.  The wav, y4m and bmp builders only walk
+containers (no entropy coding) and map on the scan as it comes.
+Building a codec DataFrame runs no Spark job.
 """
 
 from __future__ import annotations
@@ -51,6 +55,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ..session import spread
 
 #: Canonical media-table schema: id + opaque payload + typed metadata.
 MEDIA_SCHEMA = StructType(
@@ -178,109 +184,6 @@ def extract_features(media: DataFrame) -> DataFrame:
     )
 
 
-#: Target rows per codec task.  Scan splits are BYTE-sized
-#: (maxPartitionBytes), but a codec stage's cost is per-ROW CPU: a
-#: 128 MB split of an 8-byte id column packs ~10^7 ids into one task,
-#: hours of serialized decode at corpus scale.  10k rows/task keeps a
-#: task in the seconds range for these codecs while leaving the
-#: fixture SFs (≤5k rows) on the shuffle-free single-task fast path —
-#: measured 2-3x faster there than an unconditional repartition(32),
-#: whose task + Arrow overhead exceeds the entire codec CPU.
-_CODEC_ROWS_PER_TASK = 10_000
-
-#: MEASURED whole-pipeline per-record cost (milliseconds) per fixture
-#: builder: the builder's encode PLUS its consuming decode/fingerprint
-#: stage, because downstream maps chain shuffle-free so the builder's
-#: task count is the whole pipeline's codec parallelism (see
-#: _id_partitioned).  Marginal cost from a two-point single-task fit
-#: (128- vs 1024-row runs, min-of-3, per-task bring-up cancels),
-#: r16 bench box — method and full table in OPTIMIZATION_r16.md.
-#: Re-measure with the same protocol when a codec kernel changes;
-#: downstream sizing self-corrects through _rows_for.
-_PIPELINE_COST_MS = {
-    "png": 0.20,
-    "png_variant": 1.15,
-    "corrupt_png": 0.83,
-    "corrupt_av": 0.28,
-    "jpeg_prog": 1.63,
-    "webp": 3.08,
-    "gif": 0.26,
-    "bmp": 0.06,
-    "tiff": 0.30,
-    "jpeg420": 1.25,
-    "jpeg_color": 0.77,
-    "jpeg": 0.78,
-    "wav": 0.01,
-    "flac": 0.99,
-    "y4m": 0.04,
-    "phash_variant": 2.83,
-    "afp_variant": 2.33,
-    "vfp_variant": 0.81,
-    "phash_chain": 1.18,
-}
-
-#: Per-task CPU floor while the stage still fits ONE wave of the
-#: cluster: large against the ~1-5 ms local task-launch overhead,
-#: small enough that the fixture corpora fan out across the box.
-#: Measured winners at sf0.1 sit right here (quarantine 28 tasks x
-#: ~150 ms, video 27 x ~150 ms).
-_TARGET_TASK_MS = 150.0
-
-#: Per-task CPU floor BEYOND one wave: every extra wave re-pays the
-#: per-task mapInPandas bring-up (python worker checkout + Arrow
-#: stream init, measured ~0.3 s on this box via two-point single-task
-#: fits), so multi-wave tasks must carry enough work to amortize it
-#: (~20 %).  The r16 A/B that motivated the split: 150 ms tasks past
-#: one wave regressed every heavy builder (phash 2.92 -> 4.45 s at 78
-#: tasks/2.4 waves), while the same budget inside one wave was the
-#: best measured point.
-_TARGET_TASK_MS_AT_SCALE = 1500.0
-
-
-def _id_partitioned(
-    ids: DataFrame,
-    id_col: str,
-    rows_per_task: int | None = None,
-    per_record_ms: float | None = None,
-) -> DataFrame:
-    """Cost-adaptive exchange ahead of a codec mapInPandas stage (the
-    r15 verdict-#9 rule, derived instead of hand-retuned): given the
-    builder's MEASURED whole-pipeline per-record cost, fan out to
-    ``ceil(work / _TARGET_TASK_MS)`` tasks while that fits one wave of
-    ``defaultParallelism``, else to full-cluster waves of
-    ``>= _TARGET_TASK_MS_AT_SCALE`` tasks — a 10^9-row corpus still
-    fans out to the whole cluster, with the per-task Arrow bring-up
-    amortized.  Skips the shuffle entirely when one task suffices
-    (kilobyte fixtures: the exchange would cost more than the map).
-    The count is one cheap column-less scan job; payload bytes are
-    born distributed AFTER the exchange and never shuffle.  Downstream
-    decode stages chain shuffle-free, so this task count IS the whole
-    pipeline's codec parallelism.  ``rows_per_task`` remains for
-    callers sizing by row count alone."""
-    ids = ids.select(id_col)
-    rows = ids.count()
-    if per_record_ms is not None:
-        cores = ids.sparkSession.sparkContext.defaultParallelism
-        work_ms = rows * per_record_ms
-        # One WAVE of a codec stage can't use every core slot: each
-        # mapInPandas task pairs a JVM slot with a python worker doing
-        # the actual CPU, plus driver/shuffle machinery on the same
-        # box, so a full-width wave oversubscribes.  0.6 x cores is
-        # the measured one-wave optimum on this box (phash: 20 tasks
-        # 2.92 s vs 32 tasks 3.67 s vs 78 tasks 4.45 s; flac: 20
-        # tasks 0.97 s vs 32 tasks 1.24 s).
-        wave = max(1, int(cores * 0.6))
-        n = min(int(-(-work_ms // _TARGET_TASK_MS)), wave)
-        at_scale = int(-(-work_ms // _TARGET_TASK_MS_AT_SCALE))
-        if at_scale > wave:
-            # big corpus: fan out past one wave — to the whole cluster
-            # and beyond — with tasks big enough to amortize bring-up
-            n = at_scale
-    else:
-        n = -(-rows // (rows_per_task or _CODEC_ROWS_PER_TASK))
-    return ids.repartition(n) if n > 1 else ids
-
-
 def _fixture_png(media_id: int) -> tuple[int, int, bytes]:
     """Deterministic RGB PNG for one media id: ``width = 8 + id % 9``,
     ``height = 8 + (id // 9) % 9``, sample ``i`` (row-major interleaved
@@ -316,7 +219,7 @@ def png_media_from_ids(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 }
             )
 
-    return _id_partitioned(ids, id_col, per_record_ms=_PIPELINE_COST_MS["png"]).mapInPandas(
+    return spread(ids.select(id_col), id_col).mapInPandas(
         batches, schema=MEDIA_SCHEMA
     )
 
@@ -574,7 +477,7 @@ def png_variant_media_from_ids(
                 }
             )
 
-    return _id_partitioned(ids, id_col, per_record_ms=_PIPELINE_COST_MS["png_variant"]).mapInPandas(
+    return spread(ids.select(id_col), id_col).mapInPandas(
         batches, schema=MEDIA_SCHEMA
     )
 
@@ -782,7 +685,7 @@ def corrupt_png_media_from_ids(
                 }
             )
 
-    return _id_partitioned(ids, id_col, per_record_ms=_PIPELINE_COST_MS["corrupt_png"]).mapInPandas(
+    return spread(ids.select(id_col), id_col).mapInPandas(
         batches, schema=MEDIA_SCHEMA
     )
 
@@ -940,7 +843,7 @@ def corrupt_av_media_from_ids(
                 }
             )
 
-    return _id_partitioned(ids, id_col, per_record_ms=_PIPELINE_COST_MS["corrupt_av"]).mapInPandas(
+    return spread(ids.select(id_col), id_col).mapInPandas(
         batches, schema=MEDIA_SCHEMA
     )
 
@@ -1167,7 +1070,7 @@ def jpeg_prog_media_from_ids(
                 }
             )
 
-    return _id_partitioned(ids, id_col, per_record_ms=_PIPELINE_COST_MS["jpeg_prog"]).mapInPandas(
+    return spread(ids.select(id_col), id_col).mapInPandas(
         batches, schema=MEDIA_SCHEMA
     )
 
@@ -1248,7 +1151,7 @@ def webp_media_from_ids(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 }
             )
 
-    return _id_partitioned(ids, id_col, per_record_ms=_PIPELINE_COST_MS["webp"]).mapInPandas(
+    return spread(ids.select(id_col), id_col).mapInPandas(
         batches, schema=MEDIA_SCHEMA
     )
 
@@ -1311,7 +1214,7 @@ def gif_media_from_ids(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 }
             )
 
-    return _id_partitioned(ids, id_col, per_record_ms=_PIPELINE_COST_MS["gif"]).mapInPandas(
+    return spread(ids.select(id_col), id_col).mapInPandas(
         batches, schema=MEDIA_SCHEMA
     )
 
@@ -1380,9 +1283,7 @@ def bmp_media_from_ids(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 }
             )
 
-    return _id_partitioned(ids, id_col, per_record_ms=_PIPELINE_COST_MS["bmp"]).mapInPandas(
-        batches, schema=MEDIA_SCHEMA
-    )
+    return ids.select(id_col).mapInPandas(batches, schema=MEDIA_SCHEMA)
 
 
 def _fixture_tiff(media_id: int) -> tuple[int, int, bytes]:
@@ -1496,7 +1397,7 @@ def tiff_media_from_ids(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 }
             )
 
-    return _id_partitioned(ids, id_col, per_record_ms=_PIPELINE_COST_MS["tiff"]).mapInPandas(
+    return spread(ids.select(id_col), id_col).mapInPandas(
         batches, schema=MEDIA_SCHEMA
     )
 
@@ -1521,7 +1422,7 @@ def jpeg420_media_from_ids(
                 }
             )
 
-    return _id_partitioned(ids, id_col, per_record_ms=_PIPELINE_COST_MS["jpeg420"]).mapInPandas(
+    return spread(ids.select(id_col), id_col).mapInPandas(
         batches, schema=MEDIA_SCHEMA
     )
 
@@ -1546,7 +1447,7 @@ def jpeg_color_media_from_ids(
                 }
             )
 
-    return _id_partitioned(ids, id_col, per_record_ms=_PIPELINE_COST_MS["jpeg_color"]).mapInPandas(
+    return spread(ids.select(id_col), id_col).mapInPandas(
         batches, schema=MEDIA_SCHEMA
     )
 
@@ -1568,7 +1469,7 @@ def jpeg_media_from_ids(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 }
             )
 
-    return _id_partitioned(ids, id_col, per_record_ms=_PIPELINE_COST_MS["jpeg"]).mapInPandas(
+    return spread(ids.select(id_col), id_col).mapInPandas(
         batches, schema=MEDIA_SCHEMA
     )
 
@@ -1617,9 +1518,7 @@ def wav_media_from_ids(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 }
             )
 
-    return _id_partitioned(ids, id_col, per_record_ms=_PIPELINE_COST_MS["wav"]).mapInPandas(
-        batches, schema=MEDIA_SCHEMA
-    )
+    return ids.select(id_col).mapInPandas(batches, schema=MEDIA_SCHEMA)
 
 
 def _fixture_flac(media_id: int) -> tuple[int, int, int, bytes]:
@@ -1680,7 +1579,7 @@ def flac_media_from_ids(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 }
             )
 
-    return _id_partitioned(ids, id_col, per_record_ms=_PIPELINE_COST_MS["flac"]).mapInPandas(
+    return spread(ids.select(id_col), id_col).mapInPandas(
         batches, schema=MEDIA_SCHEMA
     )
 
@@ -1811,9 +1710,7 @@ def y4m_media_from_ids(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 }
             )
 
-    return _id_partitioned(ids, id_col, per_record_ms=_PIPELINE_COST_MS["y4m"]).mapInPandas(
-        batches, schema=MEDIA_SCHEMA
-    )
+    return ids.select(id_col).mapInPandas(batches, schema=MEDIA_SCHEMA)
 
 
 VIDEO_FRAME_SCHEMA = StructType(
@@ -2046,7 +1943,7 @@ def phash_variant_media_from_ids(
                 }
             )
 
-    return _id_partitioned(ids, id_col, per_record_ms=_PIPELINE_COST_MS["phash_variant"]).mapInPandas(
+    return spread(ids.select(id_col), id_col).mapInPandas(
         batches, schema=MEDIA_SCHEMA
     )
 
@@ -2374,7 +2271,7 @@ def afp_variant_media_from_ids(
                 }
             )
 
-    return _id_partitioned(ids, id_col, per_record_ms=_PIPELINE_COST_MS["afp_variant"]).mapInPandas(
+    return spread(ids.select(id_col), id_col).mapInPandas(
         batches, schema=MEDIA_SCHEMA
     )
 
@@ -2528,7 +2425,7 @@ def vfp_variant_media_from_ids(
                 }
             )
 
-    return _id_partitioned(ids, id_col, per_record_ms=_PIPELINE_COST_MS["vfp_variant"]).mapInPandas(
+    return spread(ids.select(id_col), id_col).mapInPandas(
         batches, schema=MEDIA_SCHEMA
     )
 
@@ -2640,6 +2537,6 @@ def phash_chain_media_from_ids(
                 }
             )
 
-    return _id_partitioned(ids, id_col, per_record_ms=_PIPELINE_COST_MS["phash_chain"]).mapInPandas(
+    return spread(ids.select(id_col), id_col).mapInPandas(
         batches, schema=MEDIA_SCHEMA
     )

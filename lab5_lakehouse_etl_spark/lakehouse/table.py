@@ -2197,8 +2197,10 @@ class LakeTable:
             # wall no longer pays a serial pre-pass over the source.
             # The result is checked BEFORE the stage is returned, so a
             # duplicate-keyed source still never publishes — on
-            # failure the staged files are removed like abort().
-            import threading
+            # failure the staged files are removed like abort().  An
+            # InheritableThread carries the caller's job group, so the
+            # probe is cancelled with the merge that spawned it.
+            from pyspark import InheritableThread
 
             def _dup_probe() -> None:
                 try:
@@ -2212,7 +2214,7 @@ class LakeTable:
                 except BaseException as exc:  # noqa: BLE001 — re-raised below
                     guard_result.append(exc)
 
-            guard_thread = threading.Thread(target=_dup_probe, daemon=True)
+            guard_thread = InheritableThread(target=_dup_probe, daemon=True)
             guard_thread.start()
 
         carry: list[str] = []

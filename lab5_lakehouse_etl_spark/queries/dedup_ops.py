@@ -581,8 +581,6 @@ def q_dedup_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     verify strictly after, spread across the cluster (the candidate
     relation is small by construction, so materializing it is free);
     tests/test_plans.py pins the verify stage join-free."""
-    from ..session import spread
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
@@ -607,7 +605,10 @@ def q_dedup_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.abs(F.col("na") - F.col("nb")) <= 10)
         & (F.col("id_a") < F.col("id_b")),
     ).select("id_a", "id_b", "text_a", "text_b")
-    verify = spread(cands, "id_a").localCheckpoint(eager=True)
+    # explicit width, not spread(): on a join, counting partitions
+    # runs the join's stages once before the checkpoint runs them again
+    n = spark.sparkContext.defaultParallelism
+    verify = cands.repartition(n, "id_a").localCheckpoint(eager=True)
     return (
         verify.withColumn(
             "lev", F.levenshtein("text_a", "text_b").cast("int")

@@ -243,7 +243,13 @@ def spread(df, by: str, min_partitions: int | None = None):
     real corpus the scan is already split and this returns the input
     untouched — the 100 TB plan stays shuffle-free, while the local
     fixture stops serializing a 32-core box onto one thread (measured
-    3.3 s -> 0.95 s on the prefix-join shingle pass at sf0.1)."""
+    3.3 s -> 0.95 s on the prefix-join shingle pass at sf0.1).
+
+    Expects a SCAN-FED frame (scan, filter, project): counting its
+    partitions is then free.  On a frame whose plan holds an exchange
+    (join, aggregate) ``rdd.getNumPartitions()`` runs the upstream
+    stages as a hidden job just to count; use an explicit-width
+    ``repartition(defaultParallelism, col)`` there instead."""
     from pyspark.sql import functions as F
 
     n = min_partitions or df.sparkSession.sparkContext.defaultParallelism

@@ -86,6 +86,29 @@ def test_merge_duplicate_source_keys_raise_without_latest_by(spark, df3, tmp_pat
         t.merge(spark, dup, key=["k"])
 
 
+def test_merge_dup_probe_runs_in_callers_job_group(spark, df3, tmp_path):
+    # the overlapped duplicate-key probe runs on its own thread; every
+    # job of the merge, the probe's included, must stay in the
+    # caller's job group so cancelling the group cancels the probe
+    from lab5_lakehouse_etl_spark.plans import job_count
+
+    t = LakeTable.create(df3, str(tmp_path / "t"))
+    source = spark.createDataFrame(
+        [(2, "b", 99.0), (4, "c", 40.0)], "k BIGINT, part STRING, v DOUBLE"
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("merge-probe-group", "merge under a job group")
+    try:
+        before = job_count(spark)
+        t.merge(spark, source, key=["k"])
+        after = job_count(spark)
+    finally:
+        sc._jsc.clearJobGroup()
+    grouped = set(sc.statusTracker().getJobIdsForGroup("merge-probe-group"))
+    assert after > before
+    assert set(range(before, after)) <= grouped
+
+
 def test_merge_schema_mismatch_raises(spark, df3, tmp_path):
     t = LakeTable.create(df3, str(tmp_path / "t"))
     bad = spark.createDataFrame([(1, "x")], "k BIGINT, other STRING")

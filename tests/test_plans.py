@@ -9,6 +9,7 @@ from lab5_lakehouse_etl_spark import queries as Q
 from lab5_lakehouse_etl_spark.plans import (
     has_broadcast_join,
     has_pushed_filters,
+    job_count,
     scan_read_schema,
     shuffle_count,
 )
@@ -541,10 +542,15 @@ def test_dedup_fuzzy_verify_stage_join_free(spark):
     Catalyst is again free to push `levenshtein <= 12` into the join
     residual ahead of the band predicates, the exact r7 regression
     that cost 229 s at sf0.1 (every key-matched pair paid the
-    O(len^2) DP)."""
+    O(len^2) DP).  The barrier runs the blocked join once: the
+    explicit-width exchange ahead of it needs no partition count,
+    which on a join plan would run the join's stages as a hidden
+    extra job (5 build jobs instead of 4)."""
     from lab5_lakehouse_etl_spark.plans import explain_str
 
+    before = job_count(spark)
     df = Q.QUERIES["q_dedup_fuzzy"](spark, SF_DIR)
+    assert job_count(spark) - before <= 4
     plan = explain_str(df)
     assert "levenshtein" in plan
     assert "Join" not in plan
@@ -878,25 +884,79 @@ def test_codec_queries_prune_scan_to_id(spark):
     parquet scan must read doc_id alone (a codec query that drags the
     text column through the exchange ships the whole corpus for
     nothing), and the whole pipeline runs in <=1 exchange — the
-    row-count-adaptive codec repartition; decode stages chain
-    shuffle-free."""
+    conditional session.spread() ahead of the codec map (none for the
+    container-walk builders); decode stages chain shuffle-free."""
     for name in (
         "q_multimodal_decode",
         "q_multimodal_jpeg",
+        "q_multimodal_jpeg_color",
+        "q_multimodal_jpeg420",
         "q_multimodal_jpeg_prog",
         "q_multimodal_webp",
         "q_multimodal_gif",
         "q_multimodal_bmp",
+        "q_multimodal_tiff",
         "q_multimodal_audio",
         "q_multimodal_flac",
         "q_multimodal_video",
         "q_multimodal_resize_real",
         "q_media_quarantine",
+        "q_media_quarantine_av",
+        "q_image_exif",
     ):
         df = Q.QUERIES[name](spark, SF_DIR)
         schemas = scan_read_schema(df)
         assert schemas and all(s == ["doc_id"] for s in schemas), name
         assert shuffle_count(df) <= 1, name
+
+
+#: media queries whose build is one load_table + one fixture builder
+#: + lazy transforms (the dedup-fingerprint queries add their own
+#: build-time barriers; their builders are covered one level down)
+_CODEC_QUERIES = (
+    "q_multimodal_decode", "q_multimodal_audio", "q_multimodal_flac",
+    "q_multimodal_video", "q_image_features", "q_media_quarantine",
+    "q_multimodal_webp", "q_multimodal_gif", "q_multimodal_bmp",
+    "q_multimodal_tiff", "q_media_quarantine_av", "q_image_dedup",
+    "q_multimodal_jpeg", "q_multimodal_jpeg_color", "q_multimodal_jpeg420",
+    "q_multimodal_jpeg_prog", "q_multimodal_resize_real", "q_image_exif",
+    "q_image_dedup_oriented",
+)
+
+
+def _jobs_of(spark, fn) -> int:
+    before = job_count(spark)
+    fn()
+    return job_count(spark) - before
+
+
+def test_codec_builders_run_no_job(spark):
+    """Codec fan-out is decided from the plan, not by counting rows:
+    calling any fixture builder on a scan runs no Spark job."""
+    from lab5_lakehouse_etl_spark.functions import exif as E
+    from lab5_lakehouse_etl_spark.functions import multimodal as M
+    from lab5_lakehouse_etl_spark.session import load_table
+
+    docs = load_table(spark, SF_DIR, "documents")
+    builders = [
+        getattr(mod, n)
+        for mod in (M, E)
+        for n in sorted(vars(mod))
+        if n.endswith("_media_from_ids")
+    ]
+    assert len(builders) == 21
+    for b in builders:
+        assert _jobs_of(spark, lambda: b(docs, id_col="doc_id")) == 0, b
+
+
+def test_codec_query_build_runs_only_the_scan_job(spark):
+    """Building a single-builder codec query runs no job beyond the
+    parquet schema read of its one ``load_table``."""
+    from lab5_lakehouse_etl_spark.session import load_table
+
+    scan = _jobs_of(spark, lambda: load_table(spark, SF_DIR, "documents"))
+    for name in _CODEC_QUERIES:
+        assert _jobs_of(spark, lambda: Q.QUERIES[name](spark, SF_DIR)) == scan, name
 
 
 def test_image_dedup_shuffles_fingerprints_only(spark):
