@@ -333,6 +333,7 @@ def compact_line(
                 detail.get("ratio_flags_cleared_by_remeasure", {})
             ),
             "env": detail.get("env", {}),
+            "cpus": detail.get("cpus"),
             "queries": {n: round(t, ndigits) for n, t in qdict.items()},
             "queries_omitted": omitted,
             "detail": "bench_detail.json",
@@ -860,6 +861,9 @@ def main() -> None:
     ratio_basis = {**all_timings, **{n: t for n, t in isolated.items() if t > 0}}
     detail = {
         "env": env_probe(),
+        # the parallelism the run actually had, so a reader of the
+        # line can tell a host-driven wall change from a plan change
+        "cpus": spark.sparkContext.defaultParallelism,
         "ratio_regressions": regs,
         "ratio_flags_cleared_by_remeasure": regs_cleared,
         "ratio_remeasure_skipped": remeasure_skipped,

@@ -27,6 +27,13 @@ storage shape Delta/Iceberg use:
 Snapshot isolation and time travel follow from immutability: an old
 manifest's files are never mutated, only eventually vacuumed.
 
+Write rules are checked inside the staged write, not in a pre-pass
+(Delta's ``DeltaInvariantCheckerExec``): one ``Observation`` on the
+writer's frame counts duplicate source keys (plain MERGE), GENERATED
+mismatches and CHECK violations, read in that order before anything
+publishes; a violation removes the staged files and raises.  A checked
+write runs the same jobs as an unchecked one.
+
 SCALE BOUNDARIES (stated, not hidden):
 
 - **Interchange**: the version log is this module's own JSON, not the
@@ -58,7 +65,7 @@ import uuid
 from collections.abc import Iterable
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 from pyspark.sql.window import Window
@@ -85,8 +92,16 @@ class ConcurrentWriteError(RuntimeError):
 
 
 class ConstraintViolationError(ValueError):
-    """Rows about to be written violate an active CHECK constraint
+    """Rows about to be written violate an active CHECK constraint or
+    provide a GENERATED column that does not match its expression
     (Delta InvariantViolationException twin)."""
+
+
+# A plain MERGE's source branch carries the number of source rows that
+# share each key in this helper column; the staged write observes its
+# max and drops it before the writer.
+_SRC_ROWS_PER_KEY = "__src_rows_per_key"
+
 # Above this many touched partitions a scoped rewrite loses: the
 # OR-of-ANDs pruning predicate grows linearly and the rewrite
 # approaches O(table) anyway — fall back to a plain full rewrite.
@@ -100,30 +115,21 @@ _ESCAPE_CHARS = set('"#%\'*/:=?\\\x7f{[]^')
 _HIVE_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 
 
-def _apply_generated(df: DataFrame, gen: dict, what: str) -> DataFrame:
+def _apply_generated(df: DataFrame, gen: dict) -> tuple[DataFrame, dict]:
     """GENERATED ALWAYS AS write semantics (Delta parity): a generated
     column the writer OMITS is materialized from its expression (the
-    common case — zero extra jobs, just extra plan columns); one the
-    writer PROVIDES must match the expression on every row (null-safe
-    equality), validated with one bounded check before any file is
-    staged — a mismatch raises :class:`ConstraintViolationError`, never
-    lands."""
+    common case — zero extra jobs, just extra plan columns).  Returns
+    the frame and the {name: expr} the writer PROVIDED: those must
+    match their expression on every written row (null-safe equality),
+    which the staged write checks (:meth:`LakeTable._stage_checked`) —
+    a mismatch raises :class:`ConstraintViolationError`, never lands."""
+    provided = {}
     for name, expr in (gen or {}).items():
-        if name not in df.columns:
-            df = df.withColumn(name, F.expr(expr))
+        if name in df.columns:
+            provided[name] = expr
         else:
-            bad = (
-                df.filter(~F.col(name).eqNullSafe(F.expr(expr)))
-                .limit(1_000_000)
-                .count()
-            )
-            if bad:
-                raise ConstraintViolationError(
-                    f"{what} provides generated column {name!r} with "
-                    f"{bad} row(s) not matching GENERATED ALWAYS AS "
-                    f"({expr})"
-                )
-    return df
+            df = df.withColumn(name, F.expr(expr))
+    return df, provided
 
 
 def _escape_partition_value(v) -> str:
@@ -510,6 +516,81 @@ class LakeTable:
                 )
         shutil.rmtree(stage)
         return sorted(new_files)
+
+    def _stage_checked(
+        self,
+        df: DataFrame,
+        version: int,
+        partition_by: list[str],
+        what: str,
+        provided: dict,
+        allowed_dirs: set[str] | None = None,
+    ) -> list[str]:
+        """:meth:`_stage_files` for a user write, checking the rows it
+        writes inside that same write: one ``Observation`` on the
+        writer's frame (never on a branch AQE can drop) holds the max of
+        ``_SRC_ROWS_PER_KEY`` when ``df`` carries it (dropped before the
+        writer), mismatches per ``provided`` generated column and
+        violations per CHECK constraint.  Read in that order after the
+        write; a violation removes the staged files and raises."""
+        cons = (
+            self._manifest_meta(version - 1).get("constraints", {})
+            if version
+            else {}
+        )
+        bad = {}
+        for n, e in provided.items():
+            bad[f"gen:{n}"] = ~F.col(n).eqNullSafe(F.expr(e))
+        for n, e in cons.items():
+            bad[f"check:{n}"] = ~F.coalesce(F.expr(e), F.lit(True))
+        metrics = {k: F.sum(b.cast("long")) for k, b in bad.items()}
+        if _SRC_ROWS_PER_KEY in df.columns:
+            metrics["dup"] = F.max(_SRC_ROWS_PER_KEY)
+        if not metrics:
+            return self._stage_files(df, version, partition_by, allowed_dirs)
+        # an empty frame reports NULL for max and sum, hence the coalesce
+        obs = Observation()
+        df = df.observe(
+            obs, *[F.coalesce(c, F.lit(0)).alias(k) for k, c in metrics.items()]
+        ).drop(_SRC_ROWS_PER_KEY)
+        files = self._stage_files(df, version, partition_by, allowed_dirs)
+        got = obs.get
+        gen_bad = [(n, e) for n, e in provided.items() if got[f"gen:{n}"]]
+        check_bad = [
+            f"{n} ({e}): {got[f'check:{n}']} row(s)"
+            for n, e in cons.items()
+            if got[f"check:{n}"]
+        ]
+        if got.get("dup", 0) > 1:
+            error = ValueError(
+                "merge source has duplicate keys; pass latest_by= to "
+                "define the survivor (ordered upsert)"
+            )
+        elif gen_bad:
+            n, e = gen_bad[0]
+            error = ConstraintViolationError(
+                f"{what} provides generated column {n!r} with "
+                f"{got[f'gen:{n}']} row(s) not matching GENERATED ALWAYS "
+                f"AS ({e})"
+            )
+        elif check_bad:
+            error = ConstraintViolationError(
+                f"{what} violates CHECK constraint(s) " + ", ".join(check_bad)
+            )
+        else:
+            return files
+        self._remove_staged(version, files)
+        raise error
+
+    def _remove_staged(self, version: int, files: Iterable[str]) -> None:
+        """Delete the files a stage of ``version`` wrote (version-tagged
+        names), never carryover files owned by published manifests."""
+        tag = f"v{version}-"
+        for f in files:
+            if os.path.basename(f).startswith(tag):
+                p = os.path.join(self.data_dir, f)
+                if os.path.exists(p):
+                    os.remove(p)
 
     def _footer_stats(self, relpath: str) -> dict:
         """Per-file column min/max aggregated from the parquet footer —
@@ -973,8 +1054,8 @@ class LakeTable:
         parity, creation-time only as in Delta): {name: sql_expr}.
         Writers may omit the column (it is materialized from the
         expression — the common case, zero extra jobs) or provide it
-        (validated row-by-row against the expression, one bounded
-        check per write).  The headline use is expression-derived
+        (validated row-by-row against the expression inside the staged
+        write, no extra job).  The headline use is expression-derived
         PARTITION columns — ``generated={"o_year": "year(o_orderdate)"},
         partition_by=["o_year"]`` gives hive-layout pruning on a column
         no writer ever has to compute correctly by hand."""
@@ -983,8 +1064,8 @@ class LakeTable:
             shutil.rmtree(path)
         partition_by = list(partition_by)
         generated = dict(generated or {})
-        df = _apply_generated(df, generated, "create")
-        files = t._stage_files(df, 0, partition_by)
+        df, provided = _apply_generated(df, generated)
+        files = t._stage_checked(df, 0, partition_by, "create", provided)
         t._commit_version(
             0, "create", partition_by, files, df.schema, generated=generated
         )
@@ -1683,10 +1764,12 @@ class LakeTable:
         self, spark: SparkSession, name: str, check_expr: str
     ) -> int:
         """``ALTER TABLE ... ADD CONSTRAINT name CHECK (expr)`` (Delta
-        parity): validates the EXISTING snapshot once (O(table) — the
-        one-time price Delta also pays), then commits a metadata-only
-        version carrying the constraint.  Every subsequent write
-        validates its WRITTEN rows (O(written), never O(table)) and
+        parity): validates the EXISTING snapshot once with its own job
+        (O(table) — the one-time price Delta also pays; this commit
+        writes no rows to check), then commits a metadata-only version
+        carrying the constraint.  Every subsequent merge, append and
+        overwrite counts violations among its WRITTEN rows inside the
+        staged write (O(written), never O(table), no extra job) and
         raises :class:`ConstraintViolationError` listing the count.
         Same NULL semantics as SQL CHECK: NULL evaluations pass."""
         cons = self.constraints()
@@ -1733,31 +1816,6 @@ class LakeTable:
             constraints=cons,
         )
         return prev_v + 1
-
-    def _enforce_constraints(self, df: DataFrame, what: str) -> None:
-        """Validate rows about to be WRITTEN against the active CHECK
-        constraints (one filter pass over the written rows only)."""
-        cons = self.constraints()
-        if not cons:
-            return
-        row = df.select(
-            *[
-                F.sum(
-                    F.when(
-                        ~F.coalesce(F.expr(e), F.lit(True)), 1
-                    ).otherwise(0)
-                ).alias(n)
-                for n, e in cons.items()
-            ]
-        ).collect()[0]
-        bad = {n: row[n] for n in cons if row[n]}
-        if bad:
-            raise ConstraintViolationError(
-                f"{what} violates CHECK constraint(s) "
-                + ", ".join(
-                    f"{n} ({cons[n]}): {c} row(s)" for n, c in bad.items()
-                )
-            )
 
     # -- deletion vectors (merge-on-read DELETE) ---------------------------
     _DV_SCHEMA = "file_path STRING, row_index BIGINT"
@@ -2051,27 +2109,37 @@ class LakeTable:
         return f"{db}.{name}"
 
     # -- partition scoping helpers ----------------------------------------
-    @staticmethod
-    def _partition_predicate(partition_by: list[str], tuples: list[tuple]):
-        """OR-of-ANDs literal predicate over partition tuples — a literal
-        (not a join) so Catalyst partition-prunes the scan."""
-        if not tuples:
-            return F.lit(False)
-        def one(t):
-            return reduce(
+    def _scope_to_touched(
+        self,
+        target: DataFrame,
+        prev_files: list[str],
+        partition_by: list[str],
+        touched_parts: DataFrame,
+    ) -> tuple[DataFrame, list[str], set[str] | None]:
+        """Partition-scoped copy-on-write for MERGE and DELETE: collect
+        the distinct partition tuples of ``touched_parts`` and return
+        ``target`` filtered to them by an OR-of-ANDs literal predicate
+        (not a join, so Catalyst partition-prunes the scan), the previous
+        files outside them (carried into the new manifest by reference,
+        byte-identical) and their dir names (``allowed_dirs`` of the
+        stage).  Past ``_MAX_SCOPED_PARTITIONS`` touched partitions the
+        rewrite is whole-table: ``target`` unchanged, nothing carried."""
+        touched = [tuple(r) for r in touched_parts.collect()]
+        if len(touched) > _MAX_SCOPED_PARTITIONS:
+            return target, [], None
+        touched_dirs = {_partition_dirname(partition_by, t) for t in touched}
+        depth = len(partition_by)
+        carry = [
+            f for f in prev_files
+            if "/".join(f.split("/")[:depth]) not in touched_dirs
+        ]
+        pred = F.lit(False)
+        for t in touched:
+            pred = pred | reduce(
                 lambda a, b: a & b,
                 [F.col(c).eqNullSafe(F.lit(v)) for c, v in zip(partition_by, t)],
             )
-        return reduce(lambda a, b: a | b, [one(t) for t in tuples])
-
-    def _split_carryover(
-        self, prev_files: list[str], partition_by: list[str], touched_dirs: set[str]
-    ) -> list[str]:
-        """Previous-version files NOT in a touched partition dir (they
-        carry into the new manifest by reference, byte-identical)."""
-        def pdir(relpath: str) -> str:
-            return "/".join(relpath.split("/")[: len(partition_by)])
-        return [f for f in prev_files if pdir(f) not in touched_dirs]
+        return target.filter(pred), carry, touched_dirs
 
     # -- MERGE (J4) --------------------------------------------------------
     def merge(
@@ -2147,9 +2215,7 @@ class LakeTable:
         prev_v = self.version()
         m = self._manifest(prev_v)
         partition_by: list[str] = m["partition_by"]
-        source = _apply_generated(
-            source, m.get("generated", {}), "merge source"
-        )
+        source, provided = _apply_generated(source, m.get("generated", {}))
         target = self.read(spark)
         if set(target.columns) != set(source.columns):
             if not evolve_schema:
@@ -2184,39 +2250,6 @@ class LakeTable:
                         name, F.lit(None).cast(f.dataType)
                     )
             source = source.select(*target.columns)
-        guard_thread = None
-        guard_result: list = []
-        if latest_by is None:
-            # Delta parity: multiple source rows per key is an error —
-            # a silent survivor would be partition-order nondeterministic.
-            # The guard count is OVERLAPPED with the staged write (r15
-            # verdict #5, guide §2.6 — Spark happily runs concurrent
-            # jobs; actions are only sequential because driver code
-            # calls them sequentially): the probe job back-fills
-            # executors while the staging write runs, so the merge's
-            # wall no longer pays a serial pre-pass over the source.
-            # The result is checked BEFORE the stage is returned, so a
-            # duplicate-keyed source still never publishes — on
-            # failure the staged files are removed like abort().  An
-            # InheritableThread carries the caller's job group, so the
-            # probe is cancelled with the merge that spawned it.
-            from pyspark import InheritableThread
-
-            def _dup_probe() -> None:
-                try:
-                    guard_result.append(
-                        source.groupBy(*key)
-                        .count()
-                        .filter(F.col("count") > 1)
-                        .limit(1)
-                        .count()
-                    )
-                except BaseException as exc:  # noqa: BLE001 — re-raised below
-                    guard_result.append(exc)
-
-            guard_thread = InheritableThread(target=_dup_probe, daemon=True)
-            guard_thread.start()
-
         carry: list[str] = []
         touched_dirs: set[str] | None = None
         if partition_by:
@@ -2231,20 +2264,12 @@ class LakeTable:
                 .select(*partition_by)
                 .distinct()
             )
-            touched = [
-                tuple(r)
-                for r in src_parts.unionByName(tgt_parts).distinct().collect()
-            ]
-            if len(touched) <= _MAX_SCOPED_PARTITIONS:
-                touched_dirs = {
-                    _partition_dirname(partition_by, t) for t in touched
-                }
-                carry = self._split_carryover(
-                    m["files"], partition_by, touched_dirs
-                )
-                target = target.filter(
-                    self._partition_predicate(partition_by, touched)
-                )
+            target, carry, touched_dirs = self._scope_to_touched(
+                target,
+                m["files"],
+                partition_by,
+                src_parts.unionByName(tgt_parts).distinct(),
+            )
 
         if latest_by is not None:
             # one window over target ∪ source: newest latest_by wins,
@@ -2266,30 +2291,18 @@ class LakeTable:
             kept = target.join(
                 source.select(*key).dropDuplicates(), on=key, how="left_anti"
             )
-            merged = kept.unionByName(source.select(*kept.columns))
-        self._enforce_constraints(merged, "merge")
+            # Delta parity: multiple source rows per key is an error — a
+            # silent survivor would be partition-order nondeterministic.
+            # The source branch counts its rows per key for the staged
+            # write's check, which raises before anything is returned.
+            per_key = F.count(F.lit(1)).over(Window.partitionBy(*key))
+            merged = kept.withColumn(_SRC_ROWS_PER_KEY, F.lit(1)).unionByName(
+                source.select(*kept.columns, per_key.alias(_SRC_ROWS_PER_KEY))
+            )
         new_version = prev_v + 1
-        new_files = self._stage_files(
-            merged, new_version, partition_by, allowed_dirs=touched_dirs
+        new_files = self._stage_checked(
+            merged, new_version, partition_by, "merge", provided, touched_dirs
         )
-        if guard_thread is not None:
-            guard_thread.join()
-            outcome = guard_result[0] if guard_result else 0
-            if isinstance(outcome, BaseException) or outcome:
-                # duplicate source keys (or a failed probe): the staged
-                # files belong to no manifest — remove them like abort()
-                tag = f"v{new_version}-"
-                for f in new_files:
-                    if os.path.basename(f).startswith(tag):
-                        p = os.path.join(self.data_dir, f)
-                        if os.path.exists(p):
-                            os.remove(p)
-                if isinstance(outcome, BaseException):
-                    raise outcome
-                raise ValueError(
-                    "merge source has duplicate keys; pass latest_by= to "
-                    "define the survivor (ordered upsert)"
-                )
         # merged.schema, not the stored one: picks up evolved columns;
         # identical to the stored schema when no evolution happened
         # (all merge paths preserve target column order).
@@ -2299,7 +2312,7 @@ class LakeTable:
             "merge",
             partition_by,
             sorted(carry + new_files),
-            merged.schema,
+            merged.drop(_SRC_ROWS_PER_KEY).schema,
         )
 
     def publish(self, staged: "StagedCommit") -> int:
@@ -2320,12 +2333,7 @@ class LakeTable:
         """Discard a staged snapshot: delete only the files the stage
         wrote (version-tagged names), never carryover files owned by
         published manifests."""
-        tag = f"v{staged.version}-"
-        for f in staged.files:
-            if os.path.basename(f).startswith(tag):
-                p = os.path.join(self.data_dir, f)
-                if os.path.exists(p):
-                    os.remove(p)
+        self._remove_staged(staged.version, staged.files)
 
     def overwrite(self, df: DataFrame, partition_by=None) -> int:
         """Full-content overwrite as a NEW snapshot version (Delta
@@ -2349,10 +2357,9 @@ class LakeTable:
             else list(m["partition_by"])
         )
         generated = dict(m.get("generated", {}))
-        df = _apply_generated(df, generated, "overwrite")
-        self._enforce_constraints(df, "overwrite")
+        df, provided = _apply_generated(df, generated)
         new_v = prev_v + 1
-        files = self._stage_files(df, new_v, pb)
+        files = self._stage_checked(df, new_v, pb, "overwrite", provided)
         self._commit_version(
             new_v, "overwrite", pb, files, df.schema, generated=generated
         )
@@ -2378,23 +2385,12 @@ class LakeTable:
         carry: list[str] = []
         touched_dirs: set[str] | None = None
         if partition_by:
-            touched = [
-                tuple(r)
-                for r in target.filter(cond_true)
-                .select(*partition_by)
-                .distinct()
-                .collect()
-            ]
-            if len(touched) <= _MAX_SCOPED_PARTITIONS:
-                touched_dirs = {
-                    _partition_dirname(partition_by, t) for t in touched
-                }
-                carry = self._split_carryover(
-                    m["files"], partition_by, touched_dirs
-                )
-                target = target.filter(
-                    self._partition_predicate(partition_by, touched)
-                )
+            target, carry, touched_dirs = self._scope_to_touched(
+                target,
+                m["files"],
+                partition_by,
+                target.filter(cond_true).select(*partition_by).distinct(),
+            )
         kept = target.filter(~cond_true)
         new_version = prev_v + 1
         new_files = self._stage_files(
@@ -2535,18 +2531,17 @@ class LakeTable:
         m = self._manifest(prev_v)
         partition_by: list[str] = m["partition_by"]
         schema = StructType.fromJson(m["schema"])
-        source = _apply_generated(
-            source, m.get("generated", {}), "append source"
-        )
+        source, provided = _apply_generated(source, m.get("generated", {}))
         if set(source.columns) != {f.name for f in schema.fields}:
             raise ValueError(
                 f"append schema mismatch: table {sorted(f.name for f in schema.fields)} "
                 f"vs source {sorted(source.columns)}"
             )
         source = source.select(*[f.name for f in schema.fields])
-        self._enforce_constraints(source, "append")
         new_version = prev_v + 1
-        new_files = self._stage_files(source, new_version, partition_by)
+        new_files = self._stage_checked(
+            source, new_version, partition_by, "append", provided
+        )
         self._commit_version(
             new_version,
             "append",

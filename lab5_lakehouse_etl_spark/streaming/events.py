@@ -85,12 +85,7 @@ def _micro_batch_aqe_pinned(spark: SparkSession):
     overhead dominates the work; with AQE off the same plan runs as a
     handful of jobs.  Scoped and restored like _state_sized_shuffle
     (same concurrency caveat); batch queries re-tune() their own
-    session, so nothing leaks.  Overridable for deployments whose
-    micro-batches are large enough for AQE to earn its stages:
-    SPARK_GRAFT_STREAM_AQE=1 keeps AQE on inside drains."""
-    if os.environ.get("SPARK_GRAFT_STREAM_AQE") == "1":
-        yield
-        return
+    session, so nothing leaks."""
     key = "spark.sql.adaptive.enabled"
     prev = spark.conf.get(key)
     spark.conf.set(key, "false")

@@ -22,12 +22,14 @@ def _detail(skipped=()):
 def test_line_fits_and_parses_with_real_query_names():
     t1 = {n: 1.234 for n in bench.BENCH_QUERIES}
     t2 = {f"q_tier2_{i:03d}": 0.5 for i in range(108)}
-    line = bench.compact_line(42.1, {**t1, **t2}, t1, _detail(), 0.644, 0.1)
+    detail = {**_detail(), "cpus": 4}
+    line = bench.compact_line(42.1, {**t1, **t2}, t1, detail, 0.644, 0.1)
     assert len(line.encode()) <= bench.LINE_BUDGET
     assert "\n" not in line
     p = json.loads(line)
     assert p["metric"] == "declared_query_wall_time"
     assert p["value"] == 42.1
+    assert p["cpus"] == 4
     assert len(p["queries"]) == len(t1)
     # tier-2 entries are omitted from the line (they live in the
     # sidecar) and the omission is DECLARED

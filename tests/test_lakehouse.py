@@ -87,9 +87,7 @@ def test_merge_duplicate_source_keys_raise_without_latest_by(spark, df3, tmp_pat
 
 
 def test_merge_dup_probe_runs_in_callers_job_group(spark, df3, tmp_path):
-    # the overlapped duplicate-key probe runs on its own thread; every
-    # job of the merge, the probe's included, must stay in the
-    # caller's job group so cancelling the group cancels the probe
+    # every job of a merge runs in the caller's job group
     from lab5_lakehouse_etl_spark.plans import job_count
 
     t = LakeTable.create(df3, str(tmp_path / "t"))
@@ -107,6 +105,117 @@ def test_merge_dup_probe_runs_in_callers_job_group(spark, df3, tmp_path):
     grouped = set(sc.statusTracker().getJobIdsForGroup("merge-probe-group"))
     assert after > before
     assert set(range(before, after)) <= grouped
+
+
+def test_merge_duplicate_key_reported_before_check_violation(spark, df3, tmp_path):
+    # a duplicate-keyed source that also breaks a CHECK raises the
+    # documented duplicate-key error, not the constraint error
+    t = LakeTable.create(df3, str(tmp_path / "t"))
+    t.add_constraint(spark, "v_pos", "v > 0")
+    dup = spark.createDataFrame(
+        [(2, "b", -1.0), (2, "b", -2.0)], "k BIGINT, part STRING, v DOUBLE"
+    )
+    with pytest.raises(ValueError, match="duplicate keys") as exc:
+        t.merge(spark, dup, key=["k"])
+    assert type(exc.value) is ValueError
+
+
+_DDL = "k BIGINT, part STRING, v DOUBLE"
+_REJECTED_WRITES = {
+    "duplicate_key": (
+        lambda spark, t: t.merge(
+            spark,
+            spark.createDataFrame([(2, "b", 1.0), (2, "b", 2.0)], _DDL),
+            key=["k"],
+        ),
+        "duplicate keys",
+    ),
+    "check_merge": (
+        lambda spark, t: t.merge(
+            spark, spark.createDataFrame([(9, "z", -1.0)], _DDL), key=["k"]
+        ),
+        "merge violates CHECK",
+    ),
+    "check_append": (
+        lambda spark, t: t.append(spark, spark.createDataFrame([(9, "z", -1.0)], _DDL)),
+        "append violates CHECK",
+    ),
+    "check_overwrite": (
+        lambda spark, t: t.overwrite(spark.createDataFrame([(9, "z", -1.0)], _DDL)),
+        "overwrite violates CHECK",
+    ),
+    "generated_append": (
+        lambda spark, t: t.append(
+            spark, spark.createDataFrame([(9, "z", 1.0, 99)], _DDL + ", g BIGINT")
+        ),
+        "GENERATED",
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_REJECTED_WRITES))
+def test_rejected_write_commits_nothing_and_leaves_no_file(spark, df3, tmp_path, case):
+    """Every rejected write raises its documented error, commits no
+    version and removes the files it staged: data/ holds exactly the
+    current manifest's files."""
+    write, message = _REJECTED_WRITES[case]
+    path = str(tmp_path / "t")
+    t = LakeTable.create(df3, path, partition_by=["part"], generated={"g": "k * 2"})
+    t.add_constraint(spark, "v_pos", "v > 0")
+    version = t.version()
+    with pytest.raises(ValueError, match=message):
+        write(spark, t)
+    assert t.version() == version
+    assert _data_files(path) == sorted(t.files())
+
+
+def test_checked_writes_of_an_empty_frame_commit(spark, df3, tmp_path):
+    # an empty written frame observes NULL sums: they read as no violation
+    t = LakeTable.create(
+        df3, str(tmp_path / "t"), partition_by=["part"], generated={"g": "k * 2"}
+    )
+    t.add_constraint(spark, "v_pos", "v > 0")
+    empty = spark.createDataFrame([], _DDL)
+    t.merge(spark, empty, key=["k"])
+    t.append(spark, empty.withColumn("g", F.col("k") * 2))
+    assert t.version() == 3
+    assert t.read(spark).count() == 3
+
+
+def test_checked_append_runs_the_jobs_of_a_plain_append(spark, df3, tmp_path):
+    # the CHECK and the provided generated column are counted inside
+    # the staged write: no job of their own
+    from lab5_lakehouse_etl_spark.plans import job_count
+
+    plain = LakeTable.create(df3, str(tmp_path / "plain"))
+    checked = LakeTable.create(df3, str(tmp_path / "checked"), generated={"g": "k * 2"})
+    checked.add_constraint(spark, "v_pos", "v > 0")
+    before = job_count(spark)
+    plain.append(spark, spark.createDataFrame([(5, "a", 5.0)], _DDL))
+    plain_jobs = job_count(spark) - before
+    before = job_count(spark)
+    checked.append(
+        spark, spark.createDataFrame([(5, "a", 5.0, 10)], _DDL + ", g BIGINT")
+    )
+    assert job_count(spark) - before == plain_jobs
+    assert checked.read(spark).count() == 4
+
+
+def test_checked_merge_runs_the_jobs_of_a_plain_merge(spark, df3, tmp_path):
+    from lab5_lakehouse_etl_spark.plans import job_count
+
+    source = spark.createDataFrame([(2, "b", 99.0), (4, "c", 40.0)], _DDL)
+    jobs = []
+    for name, check in (("plain", False), ("checked", True)):
+        t = LakeTable.create(df3, str(tmp_path / name), partition_by=["part"])
+        if check:
+            t.add_constraint(spark, "v_pos", "v > 0")
+        before = job_count(spark)
+        t.merge(spark, source, key=["k"])
+        jobs.append(job_count(spark) - before)
+        # the per-key helper column never reaches the stored schema
+        assert sorted(t.read(spark).columns) == ["k", "part", "v"]
+    assert jobs[0] == jobs[1]
 
 
 def test_merge_schema_mismatch_raises(spark, df3, tmp_path):
