@@ -107,6 +107,34 @@ _SRC_ROWS_PER_KEY = "__src_rows_per_key"
 # approaches O(table) anyway — fall back to a plain full rewrite.
 _MAX_SCOPED_PARTITIONS = 4096
 
+
+def _stats_arrow_schema():
+    """Columns of the parquet stats checkpoint: one declaration for its
+    pyarrow writer and both readers (:meth:`LakeTable.stats_relation`
+    and the driver-side hydrate).  A column an older checkpoint lacks
+    reads as NULL."""
+    import pyarrow as pa
+
+    return pa.schema(
+        [
+            ("file", pa.string()),
+            ("n_rows", pa.int64()),
+            ("col", pa.string()),
+            ("min_int", pa.int64()),
+            ("max_int", pa.int64()),
+            ("min_num", pa.float64()),
+            ("max_num", pa.float64()),
+            ("num_exact", pa.bool_()),
+            ("min_str", pa.string()),
+            ("max_str", pa.string()),
+            ("bloom", pa.list_(pa.int64())),
+            ("bloom_m", pa.int64()),
+            ("bloom_k", pa.int64()),
+            ("bloom_kind", pa.string()),
+        ]
+    )
+
+
 # Hive partition-path escaping (public format: Hive FileUtils.escapePathName,
 # mirrored by Spark's ExternalCatalogUtils) — needed to map a partition VALUE
 # to the directory NAME Spark writes, so carried-over vs rewritten partitions
@@ -297,7 +325,7 @@ class LakeTable:
                 )
         files: list[str] = []
         stats: dict = {}
-        for r in pq.read_table(path).to_pylist():
+        for r in pq.read_table(path, schema=_stats_arrow_schema()).to_pylist():
             st = stats.setdefault(r["file"], {})
             if r["col"] is None:
                 files.append(r["file"])
@@ -989,25 +1017,7 @@ class LakeTable:
                     r["bloom_kind"] = b["kind"]
                 if len(r) > 3:
                     recs.append(r)
-        schema = pa.schema(
-            [
-                ("file", pa.string()),
-                ("n_rows", pa.int64()),
-                ("col", pa.string()),
-                ("min_int", pa.int64()),
-                ("max_int", pa.int64()),
-                ("min_num", pa.float64()),
-                ("max_num", pa.float64()),
-                ("num_exact", pa.bool_()),
-                ("min_str", pa.string()),
-                ("max_str", pa.string()),
-                ("bloom", pa.list_(pa.int64())),
-                ("bloom_m", pa.int64()),
-                ("bloom_k", pa.int64()),
-                ("bloom_kind", pa.string()),
-            ]
-        )
-        table = pa.Table.from_pylist(recs, schema=schema)
+        table = pa.Table.from_pylist(recs, schema=_stats_arrow_schema())
         os.makedirs(self.log_dir, exist_ok=True)
         tmp = os.path.join(
             self.log_dir,
@@ -1029,7 +1039,11 @@ class LakeTable:
     def stats_relation(self, spark: SparkSession, version: int | None = None):
         """The snapshot's per-file stats as a DataFrame (reads the
         parquet checkpoint; falls back to materializing the JSON
-        manifest for tables written before checkpoints existed)."""
+        manifest for tables written before checkpoints existed).
+
+        Read with the schema the checkpoint is written with, so building
+        the relation runs no schema-inference job; a column an older
+        checkpoint lacks reads as NULL."""
         v = self.version() if version is None else version
         path = self._stats_checkpoint_path(v)
         if not os.path.exists(path):
@@ -1037,7 +1051,10 @@ class LakeTable:
             self._write_stats_checkpoint(
                 v, m["files"], m.get("file_stats", {})
             )
-        return spark.read.parquet(path)
+        from pyspark.sql.pandas.types import from_arrow_schema
+
+        schema = from_arrow_schema(_stats_arrow_schema())
+        return spark.read.schema(schema).parquet(path)
 
     @classmethod
     def create(
@@ -1290,10 +1307,6 @@ class LakeTable:
             predicates = [
                 (cm.get(c, c), op, val) for c, op, val in predicates
             ]
-        # checkpoints written before bloom indexes existed lack the
-        # columns; such snapshots also carry no bloom config, but guard
-        # structurally so a hand-rolled checkpoint can't break the plan
-        has_bloom = "bloom" in rel.columns
         temporal = re.compile(r"^\d{4}-\d{2}-\d{2}")
         offset = re.compile(r"(Z|[+-]\d{2}:\d{2})$")
 
@@ -1349,7 +1362,9 @@ class LakeTable:
             # int/str kinds only, stored kind must match, stored (m, k)
             # must equal the snapshot's config.
             bexpr = None
-            if op == "=" and has_bloom:
+            # checkpoints written before bloom indexes existed read the
+            # bloom columns as NULL, which the isNotNull guard refuses
+            if op == "=":
                 cfgc = bloom_cfg.get(colname)
                 tag = B.kind_tag(value)
                 if cfgc and tag is not None:

@@ -20,9 +20,11 @@ permissive-cast session configs.
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 #: Every driver-provided test table (TESTDATA.md).
 TABLES = (
@@ -169,11 +171,61 @@ def table_rows(sf_dir: str, name: str) -> int:
         return SparkSession.active().read.parquet(path).count()
 
 
+#: Parquet schemas Spark inferred, per session:
+#: ``{(path, nanosAsLong): (listing, StructType)}``.  Weak keys, so an
+#: entry goes away with its session.
+_SCHEMAS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _listing(path: str) -> tuple:
+    """``(name, size, mtime_ns)`` of every file under ``path``; a file
+    is its own listing.  A Spark directory rewritten in place with
+    ``mode("overwrite")`` keeps the directory but not its files."""
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return ((path, st.st_size, st.st_mtime_ns),)
+    out = []
+    for root, dirs, names in os.walk(path):
+        dirs.sort()
+        for n in sorted(names):
+            st = os.stat(os.path.join(root, n))
+            out.append((os.path.join(root, n), st.st_size, st.st_mtime_ns))
+    return tuple(out)
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers, inferred once per
+    session while the files under ``path`` are unchanged.
+
+    Inference runs a Spark job on every call; a read with a declared
+    schema runs none.  The memo key is the path, the current
+    ``spark.sql.legacy.parquet.nanosAsLong`` (it turns a nanosecond
+    timestamp into a long) and the listing of every file under the
+    path.  A path that is not a local file or directory is inferred on
+    every call, so Spark raises its own error for a missing one."""
+    if not os.path.exists(path):
+        return spark.read.parquet(path).schema
+    key = (path, spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"))
+    listing = _listing(path)
+    memo = _SCHEMAS.setdefault(spark, {})
+    hit = memo.get(key)
+    if hit is None or hit[0] != listing:
+        hit = memo[key] = (listing, spark.read.parquet(path).schema)
+    return hit[1]
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Columnar parquet scan of one driver test table.
 
-    Plain ``spark.read.parquet`` so Catalyst keeps scan-level predicate
-    pushdown and column pruning for whatever the caller composes on top.
+    ``spark.read.schema(s).parquet(path)``, with ``s`` the schema Spark's
+    own inference returned, memoized per session by
+    :func:`parquet_schema` (key: path, the nanosAsLong conf and the
+    ``(name, size, mtime_ns)`` of every file under the path), so only
+    the first call on a table runs the inference job and a query build
+    runs none.  The schema is cached, not the DataFrame: every call
+    builds a fresh plan, so a self-join of one table stays unambiguous.
+    Catalyst keeps scan-level predicate pushdown and column pruning for
+    whatever the caller composes on top.
 
     `events.ts` has shipped as either parquet TIMESTAMP(NANOS) or
     TIMESTAMP(MICROS) depending on the generator run. Spark's reader
@@ -190,17 +242,20 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     so every downstream query sees one stable TIMESTAMP type.
     """
     tune(spark)
+    path = table_path(sf_dir, name)
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(table_path(sf_dir, name))
-        if df.schema["ts"].dataType.simpleString() == "bigint":
-            ts = F.timestamp_micros(F.expr("(ts - ((ts % 1000) + 1000) % 1000) div 1000"))
-        else:
-            ts = F.col("ts").cast("timestamp")
-        return df.withColumn("ts", ts).select(
-            "event_id", "ts", "user_id", "event_type", "value", "props"
-        )
-    return spark.read.parquet(table_path(sf_dir, name))
+    schema = parquet_schema(spark, path)
+    df = spark.read.schema(schema).parquet(path)
+    if name != "events":
+        return df
+    if schema["ts"].dataType.simpleString() == "bigint":
+        ts = F.timestamp_micros(F.expr("(ts - ((ts % 1000) + 1000) % 1000) div 1000"))
+    else:
+        ts = F.col("ts").cast("timestamp")
+    return df.withColumn("ts", ts).select(
+        "event_id", "ts", "user_id", "event_type", "value", "props"
+    )
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

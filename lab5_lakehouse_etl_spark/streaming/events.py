@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..lakehouse import LakeTable
+from ..session import parquet_schema
 
 #: State partitions for the drains below.  Streaming state partitions
 #: are frozen at a checkpoint's first batch from
@@ -98,7 +99,8 @@ def _micro_batch_aqe_pinned(spark: SparkSession):
 def _events_schema_ddl(ts_type: str) -> str:
     # ts has shipped as parquet TIMESTAMP(NANOS) (→ read as long via
     # nanosAsLong, rebuilt with integer division) or TIMESTAMP(MICROS)
-    # (→ read natively); the caller probes the footer (see session.py).
+    # (→ read natively); the caller reads which from the memoized
+    # schema (session.parquet_schema).
     return (
         f"event_id BIGINT, ts {ts_type}, user_id BIGINT, "
         "event_type STRING, value DOUBLE, props STRING"
@@ -130,10 +132,12 @@ def read_events_stream(spark: SparkSession, path: str) -> DataFrame:
     """File-source replay of the events parquet (schema must be
     declared for streaming reads; maxFilesPerTrigger throttles replay)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # streaming sources need a declared schema — probe the footer with a
-    # batch read to learn which ts encoding this fixture generation uses
+    # streaming sources need a declared schema — the ts encoding of this
+    # fixture generation comes from the session's memoized batch schema
+    # (the same entry load_table's events branch uses), so only the
+    # first read of a fixture in a session runs the inference job
     ts_is_long = (
-        spark.read.parquet(path).schema["ts"].dataType.simpleString() == "bigint"
+        parquet_schema(spark, path)["ts"].dataType.simpleString() == "bigint"
     )
     raw = (
         spark.readStream.schema(

@@ -24,6 +24,15 @@ def spark():
     s.stop()
 
 
+
+def jobs_of(spark, fn) -> int:
+    """Spark jobs that calling ``fn()`` runs in this session."""
+    from lab5_lakehouse_etl_spark.plans import job_count
+
+    before = job_count(spark)
+    fn()
+    return job_count(spark) - before
+
 @pytest.fixture(scope="session")
 def ddb():
     con = duckdb.connect()

@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from lab5_lakehouse_etl_spark.lakehouse import LakeTable
+from tests.conftest import jobs_of
 
 
 def _mk_df(spark, n=200, offset=10_000_000):
@@ -83,6 +84,37 @@ def test_external_clone_stays_external(spark, tmp_path, monkeypatch):
     assert sorted(r.k for r in dest.read(spark).collect()) == sorted(
         r.k for r in src.read(spark).collect()
     )
+
+
+def test_external_reads_infer_no_checkpoint_schema(spark, tmp_path, monkeypatch):
+    """stats_relation reads the checkpoint with the schema it is written
+    with, so no read of it infers one: building it runs no job, a full
+    files_external read runs only its membership collect, and a
+    prune_via="spark" read only its survivor query (a broadcast
+    anti-join and its collect).  A checkpoint written without the bloom
+    columns reads them as NULL and prunes like the driver walk."""
+    import pyarrow.parquet as pq
+
+    monkeypatch.setenv("SPARK_GRAFT_INLINE_FILES_MAX", "4")
+    path = str(tmp_path / "t")
+    t = LakeTable.create(_mk_df(spark, n=60).repartition(6), path)
+    t.add_bloom_index("k", m=1024, k=3)
+    rng = [("k", ">=", 10_000_000), ("k", "<", 10_000_020)]
+    assert jobs_of(spark, lambda: t.stats_relation(spark)) == 0
+    assert jobs_of(spark, lambda: t.files_df(spark)) == 0
+    assert jobs_of(spark, lambda: t.read(spark)) == 1
+    assert jobs_of(spark, lambda: t.read(spark, prune=rng, prune_via="spark")) == 2
+
+    ck = t._stats_checkpoint_path(t.version())
+    pq.write_table(
+        pq.read_table(ck).drop(["bloom", "bloom_m", "bloom_k", "bloom_kind"]), ck
+    )
+    old = LakeTable(path)
+    assert old.stats_relation(spark).filter(F.col("bloom").isNotNull()).count() == 0
+    for pred in (rng, [("k", "=", 10_000_005)]):
+        assert sorted(old.prune_files_distributed(spark, pred)) == sorted(
+            old.prune_files(pred)
+        )
 
 
 def test_hundred_thousand_file_snapshot(spark, tmp_path):

@@ -13,7 +13,7 @@ from lab5_lakehouse_etl_spark.plans import (
     scan_read_schema,
     shuffle_count,
 )
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, jobs_of
 
 Q.load_all()
 
@@ -924,12 +924,6 @@ _CODEC_QUERIES = (
 )
 
 
-def _jobs_of(spark, fn) -> int:
-    before = job_count(spark)
-    fn()
-    return job_count(spark) - before
-
-
 def test_codec_builders_run_no_job(spark):
     """Codec fan-out is decided from the plan, not by counting rows:
     calling any fixture builder on a scan runs no Spark job."""
@@ -946,17 +940,34 @@ def test_codec_builders_run_no_job(spark):
     ]
     assert len(builders) == 21
     for b in builders:
-        assert _jobs_of(spark, lambda: b(docs, id_col="doc_id")) == 0, b
+        assert jobs_of(spark, lambda: b(docs, id_col="doc_id")) == 0, b
 
 
-def test_codec_query_build_runs_only_the_scan_job(spark):
-    """Building a single-builder codec query runs no job beyond the
-    parquet schema read of its one ``load_table``."""
+def test_codec_query_build_runs_no_job(spark):
+    """Once ``documents`` is warm in the session (its parquet schema
+    memoized by ``load_table``), building a single-builder codec query
+    runs no Spark job."""
     from lab5_lakehouse_etl_spark.session import load_table
 
-    scan = _jobs_of(spark, lambda: load_table(spark, SF_DIR, "documents"))
+    load_table(spark, SF_DIR, "documents")
     for name in _CODEC_QUERIES:
-        assert _jobs_of(spark, lambda: Q.QUERIES[name](spark, SF_DIR)) == scan, name
+        assert jobs_of(spark, lambda: Q.QUERIES[name](spark, SF_DIR)) == 0, name
+
+
+_RELATIONAL_QUERIES = (
+    "q_tpch_q3", "q_tpch_q5", "q_tpch_q6", "q_tpch_q10", "q_tpch_q12",
+    "q_tpch_q18", "q_agg_groupby", "q_join_star", "q_window_dedup",
+)
+
+
+def test_relational_query_build_runs_no_job_once_tables_are_warm(spark):
+    """``load_table`` infers each table's parquet schema once per
+    session, so a second build of a relational query runs no Spark job
+    (one inference job per table before the memo)."""
+    for name in _RELATIONAL_QUERIES:
+        Q.QUERIES[name](spark, SF_DIR)
+    for name in _RELATIONAL_QUERIES:
+        assert jobs_of(spark, lambda: Q.QUERIES[name](spark, SF_DIR)) == 0, name
 
 
 def test_image_dedup_shuffles_fingerprints_only(spark):

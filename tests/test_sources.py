@@ -12,6 +12,7 @@ from lab5_lakehouse_etl_spark.sources.readers import (
     split_workbook,
 )
 from lab5_lakehouse_etl_spark.sources.writers import archive_file, write_log_text
+from tests.conftest import jobs_of
 
 
 def test_split_workbook_sheet_csvs(tmp_path):
@@ -136,3 +137,79 @@ def test_load_table_events_nanos_and_micros_parity(spark, tmp_path):
     # µs precision survives (ns tail truncates toward zero like DuckDB's
     # CAST(ts_ns AS TIMESTAMP))
     assert rows_ns[7][1].microsecond == 7
+
+
+
+def _write_arrow(path, cols):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table(cols), str(path))
+
+
+def test_load_table_infers_schema_once_per_session(spark, tmp_path):
+    """A second load_table of a table runs no Spark job: the schema
+    Spark inferred on the first call is memoized for the session."""
+    from lab5_lakehouse_etl_spark.session import load_table
+
+    _write_arrow(tmp_path / "t.parquet", {"k": [1, 2, 3], "v": ["a", "b", "c"]})
+    first = load_table(spark, str(tmp_path), "t")
+    assert jobs_of(spark, lambda: load_table(spark, str(tmp_path), "t")) == 0
+    second = load_table(spark, str(tmp_path), "t")
+    assert second.schema == first.schema
+    assert first.schema == spark.read.parquet(str(tmp_path / "t.parquet")).schema
+    assert sorted(tuple(r) for r in second.collect()) == [
+        (1, "a"), (2, "b"), (3, "c"),
+    ]
+
+
+def test_load_table_calls_self_join(spark, tmp_path):
+    """Only the schema is memoized: each call builds a fresh plan, so
+    two calls on one table self-join without an ambiguity error."""
+    from lab5_lakehouse_etl_spark.session import load_table
+
+    _write_arrow(tmp_path / "t.parquet", {"k": [1, 2, 3], "parent": [2, 3, None]})
+    child = load_table(spark, str(tmp_path), "t")
+    assert jobs_of(spark, lambda: load_table(spark, str(tmp_path), "t")) == 0
+    parent = load_table(spark, str(tmp_path), "t")
+    rows = (
+        child.join(parent, child["parent"] == parent["k"])
+        .select(child["k"].alias("c"), parent["k"].alias("p"))
+        .collect()
+    )
+    assert sorted(tuple(r) for r in rows) == [(1, 2), (2, 3)]
+
+
+def test_load_table_sees_a_rewritten_file(spark, tmp_path):
+    """Rewriting a single-file table with an extra column changes its
+    listing, so the next call infers again; the call after that hits
+    the memo."""
+    from lab5_lakehouse_etl_spark.session import load_table
+
+    _write_arrow(tmp_path / "t.parquet", {"k": [1, 2]})
+    assert load_table(spark, str(tmp_path), "t").columns == ["k"]
+    _write_arrow(tmp_path / "t.parquet", {"k": [1, 2], "extra": ["x", "y"]})
+    df = load_table(spark, str(tmp_path), "t")
+    assert df.columns == ["k", "extra"]
+    assert sorted(tuple(r) for r in df.collect()) == [(1, "x"), (2, "y")]
+    assert jobs_of(spark, lambda: load_table(spark, str(tmp_path), "t")) == 0
+
+
+def test_load_table_sees_a_spark_directory_overwritten_in_place(spark, tmp_path):
+    """A Spark directory rewritten with ``mode("overwrite")`` keeps its
+    path but not its files, and the memo key lists every file under the
+    path."""
+    from pyspark.sql import functions as F
+
+    from lab5_lakehouse_etl_spark.session import load_table
+
+    path = str(tmp_path / "t.parquet")
+    spark.range(3).write.parquet(path)
+    assert load_table(spark, str(tmp_path), "t").columns == ["id"]
+    spark.range(3).withColumn("extra", F.col("id") * 10).write.mode(
+        "overwrite"
+    ).parquet(path)
+    df = load_table(spark, str(tmp_path), "t")
+    assert df.columns == ["id", "extra"]
+    assert sorted(tuple(r) for r in df.collect()) == [(0, 0), (1, 10), (2, 20)]
+    assert jobs_of(spark, lambda: load_table(spark, str(tmp_path), "t")) == 0

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from lab5_lakehouse_etl_spark.session import load_table, table_path
 from lab5_lakehouse_etl_spark.streaming import events as E
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, jobs_of
 
 
 @pytest.fixture(scope="module")
@@ -277,6 +277,15 @@ def test_read_events_stream_nanos_and_micros_parity(spark, tmp_path):
         drained[unit] = sorted(tuple(r) for r in out.collect())
     assert drained["ns"] == drained["us"]
     assert len(drained["ns"]) == 8
+
+
+def test_read_events_stream_shares_load_table_schema(spark):
+    """The stream source takes its ts encoding from the session's
+    memoized events schema: once load_table has read events, building
+    the stream runs no Spark job."""
+    load_table(spark, SF_DIR, "events")
+    path = table_path(SF_DIR, "events")
+    assert jobs_of(spark, lambda: E.read_events_stream(spark, path)) == 0
 
 
 @pytest.mark.skipif(
