@@ -109,13 +109,6 @@ def _affine_params(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
     ]
 
 
-def base_hashes(shingles: F.Column) -> F.Column:
-    """One xxhash64 per shingle, masked to 32 bits (see _affine_params)."""
-    return F.transform(
-        shingles, lambda s: F.xxhash64(s).bitwiseAND(F.lit(0xFFFFFFFF))
-    )
-
-
 def minhash_signature_sql(shingles_sql: str, num_hashes: int = 32) -> str:
     """SQL for a MinHash signature computed straight from a shingle
     expression, with every intermediate LET-bound.
@@ -154,79 +147,6 @@ def _band_keys(sig_col: str, num_hashes: int, bands: int) -> F.Column:
         for b in range(bands)
     )
     return F.expr(f"array({structs})")
-
-
-def _minhash_sigs_arrow(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int,
-    ngram: int,
-    seed: int = 42,
-) -> DataFrame:
-    """MinHash signatures via mapInPandas: Arrow-batched, numpy-
-    vectorized across the whole batch.
-
-    Spark's higher-order functions run interpreted (no codegen), so the
-    expression-based signature pipeline pays ~1µs per lambda step. This
-    backend concatenates every doc's n-gram hashes into ONE flat array,
-    applies all H affine permutations as a single (H, T) numpy
-    broadcast, and reduces per-doc minima with np.minimum.reduceat —
-    zero per-doc Python beyond tokenization. Same plan shape as the
-    expression path: a narrow map, no shuffle; Arrow transfer is one
-    (id, sig) column pair per row.
-
-    crc32 replaces xxhash64 as the base hash (stdlib, deterministic,
-    32-bit — the affine family only needs a uniform 32-bit base).
-    """
-    import re as _re
-    import zlib
-
-    import numpy as np
-    import pandas as pd
-
-    params = _affine_params(num_hashes, seed)
-    a_arr = np.array([a for a, _ in params], dtype=np.uint64)[:, None]
-    b_arr = np.array([b for _, b in params], dtype=np.uint64)[:, None]
-    p = np.uint64(2147483647)
-    # same explicit whitespace class as the SQL path (word_ngrams_sql):
-    # Python's \s adds \x0B plus unicode spaces, so the shorthand would
-    # let the two signature backends tokenize differently on real text
-    ws = _re.compile(r"[ \t\n\r\f]+")
-
-    def batches(it):
-        for pdf in it:
-            hashes: list[np.ndarray] = []
-            offsets = [0]
-            for t in pdf[text_col]:
-                toks = ws.split(t.lower()) if t else [""]
-                n_g = max(len(toks) - ngram + 1, 1)
-                grams = {" ".join(toks[i : i + ngram]) for i in range(n_g)}
-                hs = np.fromiter(
-                    (zlib.crc32(g.encode()) for g in grams),
-                    dtype=np.uint64,
-                    count=len(grams),
-                )
-                hashes.append(hs)
-                offsets.append(offsets[-1] + len(hs))
-            flat = (
-                np.concatenate(hashes) if hashes else np.empty(0, dtype=np.uint64)
-            )
-            vals = (a_arr * flat[None, :] + b_arr) % p  # (H, T)
-            if len(offsets) > 1:
-                mins = np.minimum.reduceat(vals, offsets[:-1], axis=1)  # (H, D)
-            else:
-                mins = np.empty((num_hashes, 0), dtype=np.uint64)
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col].values,
-                    "sig": list(mins.T.astype(np.int64)),
-                }
-            )
-
-    return df.select(id_col, text_col).mapInPandas(
-        batches, schema="id long, sig array<long>"
-    )
 
 
 def lsh_collision_prob(j: float, bands: int, rows: int) -> float:
@@ -322,7 +242,6 @@ def minhash_candidate_pairs(
     bands: int = 8,
     shingle_fn=None,
     est_threshold: float = 0.4,
-    backend: str = "expr",
 ) -> DataFrame:
     """Candidate near-dup pairs via MinHash + LSH banding + signature
     pre-filter.
@@ -340,18 +259,9 @@ def minhash_candidate_pairs(
     Word n-grams keep unrelated docs near 0 while true near-dups stay
     high — candidates shrink by orders of magnitude.
 
-    Two signature backends, measured head-to-head at sf0.1:
-
-    - ``backend="expr"`` (default): one JVM SQL expression per row.
-      Interpreted HOFs, but zero Python-worker round trips — fastest at
-      lab scale where per-stage overhead dominates (~3 s for the full
-      query at sf0.1 vs ~5-7 s for arrow).
-    - ``backend="arrow"``: mapInPandas + numpy, vectorized across the
-      whole Arrow batch (np.minimum.reduceat over all H permutations at
-      once). Per-doc compute is ~20× cheaper, so it wins once the
-      corpus is large enough that compute, not stage launch, dominates
-      — the 100 TB path. tests/test_dedup_backends.py pins the two
-      backends to the same verified output.
+    Signatures are one JVM SQL expression per row
+    (:func:`minhash_signature_sql`): interpreted HOFs, but zero
+    Python-worker round trips.
     """
     spark = df.sparkSession
     # Fixture-parallelism: see session.spread — conditional, so a real
@@ -364,19 +274,12 @@ def minhash_candidate_pairs(
     # (xxhash64(NULL) = seed) and verifies at jaccard 1.0 against every
     # other NULL doc (r10 review).
     spread = _spread(df.filter(F.col(text_col).isNotNull()), id_col, n_part)
-    if backend == "arrow":
-        if shingle_fn is not None:
-            raise ValueError("custom shingle_fn requires backend='expr'")
-        sigs_raw = _minhash_sigs_arrow(spread, id_col, text_col, num_hashes, ngram=2)
-    else:
-        if shingle_fn is None:
-            shingle_fn = lambda c: word_ngrams_sql(c, 2)  # noqa: E731
-        sigs_raw = spread.select(
-            F.col(id_col).alias("id"),
-            F.expr(minhash_signature_sql(shingle_fn(text_col), num_hashes)).alias(
-                "sig"
-            ),
-        )
+    if shingle_fn is None:
+        shingle_fn = lambda c: word_ngrams_sql(c, 2)  # noqa: E731
+    sigs_raw = spread.select(
+        F.col(id_col).alias("id"),
+        F.expr(minhash_signature_sql(shingle_fn(text_col), num_hashes)).alias("sig"),
+    )
     # Cache AT THE SIGNATURE: (a) the sig column is referenced by 8 band
     # hashes + the estimate — CollapseProject would re-evaluate the whole
     # signature pipeline per reference without this barrier; (b) the
@@ -534,10 +437,9 @@ def _simhash_fp_arrow(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     row (~1 µs each; measured 2.8 s of the query's wall at sf0.1) —
     while the token hash is one codegen'd xxhash64 per token.  Keeping
     the base hash JVM-side makes the two backends produce
-    BIT-IDENTICAL fingerprints (pinned in tests/test_dedup_backends.py)
-    — unlike the minhash pair of backends, which are only
-    output-equivalent, simhash's golden tests pin the raw Hamming pair
-    set, so the backends must agree at the fingerprint level.  The
+    BIT-IDENTICAL fingerprints (pinned in tests/test_dedup_backends.py):
+    simhash's golden tests pin the raw Hamming pair set, so the
+    backends must agree at the fingerprint level.  The
     unsigned bit-63 wraparound matches the JVM's two's-complement
     ``shiftleft(1L, 63)`` exactly (distinct powers of two never carry).
     Narrow map, no shuffle; Arrow moves (id, T×8-byte hash array) per
@@ -1655,7 +1557,7 @@ def minhash_band_index(
     the band hashes to plus the full signature (needed so a later
     probe can run the cheap estimate gate without the original text).
     Same signature SQL, same band slicing, same seeds as
-    minhash_candidate_pairs' expr backend, so an index built today and
+    minhash_candidate_pairs, so an index built today and
     a probe computed next ingest agree bit-for-bit.
 
     This is the index-store pattern's near-dup leg (cf.

@@ -43,18 +43,6 @@ PNG_SIGNATURE = b"\x89PNG\r\n\x1a\n"
 _CHANNELS = {0: 1, 2: 3, 4: 2, 6: 4}
 
 
-def _paeth(a: int, b: int, c: int) -> int:
-    """Paeth predictor (RFC 2083 §6.6): nearest of left/up/up-left to
-    the linear estimate a + b - c, ties broken left, up, up-left."""
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    if pb <= pc:
-        return b
-    return c
-
-
 def _unfilter_scanline(
     ftype: int, line: bytearray, prev: bytes, bpp: int
 ) -> bytearray:

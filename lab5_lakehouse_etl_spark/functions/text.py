@@ -14,7 +14,7 @@ parquet-scan speed.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StringType
 
@@ -49,22 +49,6 @@ def tokens(text: Column) -> Column:
 
 def token_count(text: Column) -> Column:
     return F.size(tokens(text)).cast("bigint")
-
-
-def distinct_token_count(text: Column) -> Column:
-    return F.size(F.array_distinct(tokens(text))).cast("bigint")
-
-
-def bpe_ish_token_count(text: Column) -> Column:
-    """Sub-word-ish token count: each word contributes ceil(len/4)
-    pieces — a cheap, deterministic stand-in for a BPE tokenizer's token
-    count (JVM lambda aggregate; no lookahead regex, so the DuckDB/RE2
-    oracle can express the identical rule)."""
-    return F.aggregate(
-        tokens(text),
-        F.lit(0).cast("bigint"),
-        lambda acc, t: acc + F.ceil(F.length(t) / 4),
-    )
 
 
 def token_stats(text_col: str) -> Column:
@@ -185,16 +169,6 @@ def gopher_repetition_stats(text_col: str) -> Column:
     )
 
 
-def quality_score(text: Column) -> Column:
-    """Composite [0,1] quality score from length / punctuation /
-    stopword signals — the standard cheap pre-filter for LLM training
-    corpora (length-normalized, deterministic)."""
-    length_ok = F.when(F.length(text).between(50, 20000), 1.0).otherwise(0.3)
-    sw_ratio = stopword_count(text) / F.greatest(token_count(text), F.lit(1))
-    sw_ok = F.when(sw_ratio.between(0.01, 0.5), 1.0).otherwise(0.5)
-    return F.round(length_ok * 0.5 + sw_ok * 0.3 + (1.0 - punct_ratio(text)) * 0.2, 6)
-
-
 def lang_guess(text: Column) -> Column:
     """Deterministic marker-word language heuristic (JVM CASE chain).
 
@@ -311,20 +285,3 @@ def lang_id_ngram(texts: pd.Series) -> pd.Series:
         return best
 
     return texts.map(guess)
-
-
-def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the full text-analysis column family to a document table."""
-    t = F.col(text_col)
-    return df.select(
-        "*",
-        token_count(t).alias("n_tokens"),
-        distinct_token_count(t).alias("n_distinct_tokens"),
-        bpe_ish_token_count(t).alias("n_subword_tokens"),
-        punct_ratio(t).alias("punct_ratio"),
-        stopword_count(t).alias("n_stopwords"),
-        avg_token_len(t).alias("avg_token_len"),
-        quality_score(t).alias("quality"),
-        lang_guess(t).alias("lang_guess"),
-        rolling_fingerprint(t).alias("fingerprint"),
-    )

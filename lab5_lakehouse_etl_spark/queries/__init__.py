@@ -4,14 +4,22 @@ Every operator the engine claims (SURVEY.md §2) registers here as a
 ``(spark, sf_dir) -> DataFrame`` callable, optionally paired with the
 ANSI-SQL string a DuckDB oracle runs over the same parquet tables.
 ``__spark_entry__`` re-exports this registry to the correctness driver.
+
+A registered body runs on whatever session its caller passes (the
+driver's vanilla one included): :func:`query` wraps it so
+``session.tune`` pins the session settings first, and bodies write no
+confs themselves.
 """
 
 from __future__ import annotations
 
+import functools
 import importlib
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..session import tune
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -44,15 +52,24 @@ _MODULES = (
 
 
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
-    """Register a declared query; ``oracle`` is its DuckDB twin SQL."""
+    """Register a declared query; ``oracle`` is its DuckDB twin SQL.
+
+    The registered callable, which the decorator also returns, runs
+    ``tune(spark)`` and then the body."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in QUERIES:
             raise ValueError(f"duplicate query name: {name}")
-        QUERIES[name] = fn
+
+        @functools.wraps(fn)
+        def tuned(spark: SparkSession, *args, **kwargs) -> DataFrame:
+            tune(spark)
+            return fn(spark, *args, **kwargs)
+
+        QUERIES[name] = tuned
         if oracle is not None:
             ORACLES[name] = oracle
-        return fn
+        return tuned
 
     return deco
 

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..lakehouse import LakeTable
-from ..session import load_table, scratch_dir, tune
+from ..session import load_table, scratch_dir
 from . import query
 
 
@@ -35,7 +35,6 @@ def q_table_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partitioned initial write (S8: partitionBy, mode=overwrite) +
     snapshot read-back (S6) + existence probe (S7). Returns per-
     partition counts of the round-tripped table."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders").withColumn(
         "o_year", F.year("o_orderdate").cast("int")
     )
@@ -65,7 +64,6 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     for half the evens plus all odd rows; verify the merged snapshot
     equals the independent relational oracle exactly (0 diff rows), and
     that a second identical merge is idempotent."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"
     )
@@ -159,7 +157,6 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     property itself is pinned in tests/test_bucketing.py."""
     from ..lakehouse import bucketed as B
 
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("o_orderkey"), "l_quantity"
@@ -226,7 +223,6 @@ def q_table_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     every mult-4 key is an update (pre+post), every odd key an insert,
     nothing is a delete, and unchanged rows copied during the partition
     rewrite must cancel out of the feed entirely."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"
     )
@@ -276,7 +272,6 @@ def q_mv_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is the nightly-rollup
     pattern: the feed is O(changed rows) while a recompute is
     O(table)."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderdate",
@@ -348,7 +343,6 @@ def q_table_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-month predicate touches."""
     import datetime
 
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderdate"
     )
@@ -398,7 +392,6 @@ def q_table_skipping_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     that it actually skips files."""
     import datetime
 
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderdate"
     )
@@ -448,7 +441,6 @@ def q_table_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows — no more (over-delete), no fewer (resurrection).  At 100 TB
     this is the GDPR-erasure path: deleting one customer's rows from a
     year of 1 GB files writes O(matching rows), not O(files)."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
@@ -491,7 +483,6 @@ def q_table_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     at O(small files), never O(table)."""
     import os
 
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
@@ -532,7 +523,6 @@ def q_table_skipping_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     gives its leading column.  The in-code asserts pin exactly that:
     each single-dimension predicate alone must skip files.  The oracle
     hash pins that 2-D skipping never drops a matching row."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
@@ -584,7 +574,6 @@ def q_table_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     table clustered BY the probed column (one sort order per table);
     bloom filters give sub-linear point reads on any indexed column at
     ~1 KiB of manifest per file each."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
@@ -648,7 +637,6 @@ def q_table_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropped rows in the link step mismatches.  At 100 TB this is the
     dev/test-against-production-data move: a full-fidelity table copy
     in seconds of metadata work."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
@@ -682,7 +670,6 @@ def q_table_generated(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot).  The oracle hashes the pruned read against a plain
     year() filter on the raw table, pinning both the generation
     expression and the skipping soundness."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderdate"
     )
@@ -735,7 +722,6 @@ def q_table_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
     logical name and forking the physical schema) mismatches.  This is
     the schema-evolution path a 100 TB table needs: renames cost one
     manifest commit, never a rewrite."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
@@ -778,7 +764,6 @@ def q_table_optimize_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     mismatches.  This is the nightly maintenance shape at 100 TB:
     compact yesterday's ingest partition without touching the other
     364."""
-    tune(spark)
     orders = (
         load_table(spark, sf_dir, "orders")
         .select("o_orderkey", "o_totalprice", "o_orderdate")
@@ -831,7 +816,6 @@ def q_table_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     physical schema, mismatches.  Composes the lazy-drop path with
     real writes, which the pytest pin alone exercises only at toy
     scale."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
@@ -884,7 +868,6 @@ def q_table_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     full evolved snapshot, which the oracle restates relationally
     (source rows with the new column ∪ untouched base rows with NULL)
     — proving evolution changed the schema and nothing else."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey"
     )
@@ -922,7 +905,6 @@ def q_table_delta_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitionValues with schemaString types).  The oracle restates the
     merged relation from the source table — a wrong action stream,
     partition-value encoding, or schemaString breaks the value hash."""
-    tune(spark)
     from ..lakehouse.delta_log import export_delta_log, read_delta_snapshot
 
     nation = load_table(spark, sf_dir, "nation")
@@ -987,7 +969,6 @@ def q_table_iceberg(spark: SparkSession, sf_dir: str) -> DataFrame:
     readers go straight from the manifest list to file paths with no
     directory listing, which is exactly the property that makes
     Iceberg work at 100 TB."""
-    tune(spark)
     from ..lakehouse.iceberg_meta import (
         _load_metadata,
         export_iceberg_metadata,
@@ -1075,7 +1056,6 @@ def q_table_iceberg_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-pruned distributed parquet read — the same
     merge-on-read economics that make GDPR-eraser workloads viable on
     a 100 TB table."""
-    tune(spark)
     from ..lakehouse.iceberg_meta import (
         _load_metadata,
         export_iceberg_metadata,
@@ -1149,7 +1129,6 @@ def q_table_iceberg_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical read plan to q_table_iceberg — the name mapping
     is O(columns) metadata; the scan stays partition-pruned parquet
     with a rename-only projection."""
-    tune(spark)
     from ..lakehouse.iceberg_meta import (
         _load_metadata,
         export_iceberg_metadata,
@@ -1225,7 +1204,6 @@ def q_table_iceberg_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB — a selective scan goes manifest-list → bounds → the few
     matching files, never listing or footer-probing the other
     99.9%."""
-    tune(spark)
     from ..lakehouse.iceberg_meta import (
         export_iceberg_metadata,
         read_iceberg_snapshot,
@@ -1295,7 +1273,6 @@ def q_table_iceberg_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     the point lookup reads 1/8 of the files BEFORE any row is
     scanned — hash-partitioned scan planning is exactly what makes
     key lookups tractable on a 100 TB table."""
-    tune(spark)
     from ..lakehouse import iceberg_transforms as T
     from ..lakehouse.iceberg_meta import (
         export_iceberg_metadata,
@@ -1388,7 +1365,6 @@ def q_table_iceberg_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     time-series lakehouse data — a day-partitioned 100 TB events
     table serves a 2-day dashboard query by reading 2/365 of its
     files, decided driver-side from kilobytes of metadata."""
-    tune(spark)
     from ..lakehouse import iceberg_transforms as T
     from ..lakehouse.iceberg_meta import (
         export_iceberg_metadata,
@@ -1470,7 +1446,6 @@ def q_table_iceberg_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical to the flat queries — metadata is O(files)
     driver-side kilobytes, the read is a distributed parquet scan
     whose nested columns Spark prunes/projects natively."""
-    tune(spark)
     from ..lakehouse.iceberg_meta import (
         export_iceberg_metadata,
         read_iceberg_snapshot,

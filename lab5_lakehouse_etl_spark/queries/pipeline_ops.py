@@ -241,12 +241,11 @@ def q_pipeline_web(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions import text as T
     from ..functions.html import html_to_text
     from ..functions.urls import canonical_url
-    from ..session import scratch_dir, tune
+    from ..session import scratch_dir
     from ..sources import warc as W
     from ..sources.readers import read_warc
     from .corpus_ops import _split
 
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     blk = Window.partitionBy(F.expr("doc_id DIV 16")).orderBy("doc_id")
     staged = docs.select(

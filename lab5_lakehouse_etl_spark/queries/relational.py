@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import relational as ops
-from ..session import load_table, tune
+from ..session import load_table
 from . import query
 
 
@@ -250,7 +250,6 @@ def q_sql_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (metadata-only DDL, no copy), queried by qualified name, with ORDER
     BY added for determinism. Spark plans this as TakeOrderedAndProject
     — no global sort materialization."""
-    tune(spark)
     spark.sql("CREATE DATABASE IF NOT EXISTS lakehouse_dwh")
     spark.sql("DROP TABLE IF EXISTS lakehouse_dwh.part")
     spark.sql(

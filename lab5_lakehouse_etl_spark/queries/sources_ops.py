@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import load_table, scratch_dir, tune
+from ..session import load_table, scratch_dir
 from ..sources.readers import read_csv_untyped, split_workbook
 from . import query
 
@@ -38,7 +38,6 @@ def q_scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     types it (jobs/order_glue_job.py:105-109). Round-trips `nation`
     through a real CSV file so the all-string landing → try_cast path is
     what the oracle hashes."""
-    tune(spark)
     nation = load_table(spark, sf_dir, "nation")
     csv_dir = scratch_dir("q_scan_csv", fresh=True) + "/nation_csv"
     nation.coalesce(1).write.mode("overwrite").option("header", True).csv(csv_dir)
@@ -72,7 +71,6 @@ def q_xlsx_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     The workbook is built deterministically from `region` (one sheet per
     region pair, like the reference's monthly multi-sheet order drops).
     """
-    tune(spark)
     region = load_table(spark, sf_dir, "region")
     rows = sorted(region.collect(), key=lambda r: r.r_regionkey)
     header = ["r_regionkey", "r_name"]
@@ -127,7 +125,6 @@ def q_scan_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.readers import read_jsonl
 
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     land = scratch_dir("q_scan_jsonl", fresh=True) + "/documents_jsonl"
     docs.write.mode("overwrite").json(land)
@@ -170,7 +167,6 @@ def q_scan_avro(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallelism unit — the normal shape of warehouse Avro landings;
     block-splitting on sync markers and nested/logical types refuse
     loudly."""
-    tune(spark)
     from ..lakehouse import avro as A
     from ..sources.readers import read_avro
 
@@ -326,7 +322,6 @@ def q_scan_warc(spark: SparkSession, sf_dir: str) -> DataFrame:
     bytes stay inside the scan; the quarantine verdicts make one
     corrupt member cost one row, never a task.  4-job shape: fixture
     write action + binaryFile listing + the hashed scan."""
-    tune(spark)
     import pandas as pd
 
     from ..sources import warc as W

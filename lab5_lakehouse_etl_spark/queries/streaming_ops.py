@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import cluster_for_write, load_table, scratch_dir, table_path, tune
+from ..session import cluster_for_write, load_table, scratch_dir, table_path
 from ..streaming import events as E
 from . import query
 
@@ -130,7 +130,6 @@ def q_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture is one parquet file → one micro-batch with availableNow, so
     the update-mode sink holds exactly the final per-user totals, which
     must equal the batch GROUP BY."""
-    tune(spark)
     stream = E.read_events_stream(spark, table_path(sf_dir, "events"))
     return E.run_to_memory(
         E.stateful_user_counts(stream), "q_stream_stateful_sink", spark, "update"
@@ -164,7 +163,6 @@ def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     one input file → one micro-batch, no row is ever late, each window's
     single update row MERGEs its final aggregate, so the table equals
     the batch epoch-bucket aggregation."""
-    tune(spark)
     stream = E.read_events_stream(spark, table_path(sf_dir, "events"))
     scratch = scratch_dir("q_stream_tumbling", fresh=True)
     table = E.stream_agg_to_table(
@@ -191,7 +189,6 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     identity pass — the oracle pins that the streaming machinery loses
     and duplicates nothing end to end (and the multi-batch late-drop
     behavior is measured separately in tests/test_streaming.py)."""
-    tune(spark)
     stream = E.read_events_stream(spark, table_path(sf_dir, "events"))
     return E.run_to_memory(E.stream_dedup(stream), "q_stream_dedup_sink", spark)
 
@@ -235,7 +232,6 @@ def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL twin: a session closes when the next event is >= 30 minutes
     away (session_window intervals are half-open [start, last+gap)),
     session_end = last event + gap."""
-    tune(spark)
     stream = E.read_events_stream(spark, table_path(sf_dir, "events"))
     scratch = scratch_dir("q_stream_session", fresh=True)
     table = E.stream_sessions_to_table(
@@ -269,7 +265,6 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounding join state on both ends. Oracle-paired with the equivalent
     batch interval join; also pinned against the batch DataFrame join
     in tests/test_streaming.py."""
-    tune(spark)
     stream = E.read_events_stream(spark, table_path(sf_dir, "events"))
     return E.run_to_memory(
         E.view_purchase_join(stream), "q_stream_join_sink", spark, "append"
@@ -292,7 +287,6 @@ def q_stream_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     event_ids mean the latest-wins MERGE converges to the input events
     exactly — the oracle pins that the stream → foreachBatch → MERGE →
     snapshot-read path is lossless."""
-    tune(spark)
     stream = E.read_events_stream(spark, table_path(sf_dir, "events"))
     scratch = scratch_dir("q_stream_merge", fresh=True)
     table = E.stream_merge_to_table(
@@ -319,7 +313,6 @@ def q_stream_dedup_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
     identity pass — pinning that the within-watermark machinery loses
     and duplicates nothing; the actual jittered-duplicate collapse is
     asserted multi-batch in tests/test_streaming.py."""
-    tune(spark)
     stream = E.read_events_stream(spark, table_path(sf_dir, "events"))
     return E.run_to_memory(
         E.stream_dedup_within_watermark(stream), "q_stream_dedup_wm_sink", spark
@@ -355,7 +348,6 @@ def q_stream_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     timing itself is measured separately in tests/test_streaming.py;
     the complete-mode memory sink is the same documented test-harness
     drain as q_stream_tumbling."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value", "props"
     )
@@ -410,7 +402,6 @@ def q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     join.  At 100 TB the static side refreshes per micro-batch epoch
     from its table — exactly this plan with the aggregate swapped for
     a LakeTable read."""
-    tune(spark)
     ev_static = load_table(spark, sf_dir, "events")
     stats = ev_static.groupBy("event_type").agg(
         F.round(F.avg("value"), 4).alias("type_avg")
@@ -476,7 +467,6 @@ def q_stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions import decontaminate as DC
     from ..streaming import events as E
 
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     split = F.pmod(F.col("doc_id") * F.lit(2654435761), F.lit(100))
     train = docs.filter(split < 80).select("doc_id", "text")
@@ -555,7 +545,6 @@ def q_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..plans import job_count
     from ..streaming import events as E
 
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     base = docs.filter(F.col("doc_id") % 4 != 0)
     batch = docs.filter(F.col("doc_id") % 4 == 0)
@@ -637,12 +626,11 @@ def q_stream_warc(spark: SparkSession, sf_dir: str) -> DataFrame:
     (dropped before write)."""
     import pandas as pd
 
-    from ..session import scratch_dir, tune
+    from ..session import scratch_dir
     from ..sources.readers import WARC_SCHEMA  # noqa: F401 (contract)
     from ..streaming import events as E
     from .sources_ops import warc_fixture_member
 
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     scratch = scratch_dir("q_stream_warc", fresh=True)
     land = f"{scratch}/landing"

@@ -1,15 +1,22 @@
-"""SparkSession construction and test-table registration.
+"""SparkSession construction, the session settings every query runs
+under, and test-table registration.
 
 Mirrors the reference's session bootstrap (jobs/order_glue_job.py:49-53
-builds a Delta-enabled session; we have no delta-spark in this
-environment, so the lakehouse layer in `lab5_lakehouse_etl_spark.lakehouse`
-provides the ACID-ish table semantics instead) while adding the configs
-that matter for scale:
+builds a Delta-enabled session and leaves it alone; we have no
+delta-spark in this environment, so the lakehouse layer in
+`lab5_lakehouse_etl_spark.lakehouse` provides the ACID-ish table
+semantics instead) while adding the configs that matter for scale:
 
 - AQE on (runtime re-planning, skew-join handling, partition coalescing).
 - Arrow execution for any pandas interchange.
-- Session timezone pinned to UTC so timestamp results are identical
-  under any driver session and match DuckDB's naive-UTC reads.
+- The settings :func:`tune` pins (UTC session timezone, shuffle width,
+  TIMESTAMP_MICROS output, nanosecond timestamps read as long).
+
+This module is the only place that writes session confs: every
+registered query runs :func:`tune` first (the ``query()`` decorator in
+``queries/__init__.py`` does it), and a stream drain narrows the
+session for its own duration through :func:`scoped_conf`.  Readers
+write none.
 
 All queries must ALSO be correct under a vanilla session the driver
 builds (ANSI mode on in Spark 4), which is why operators use
@@ -21,6 +28,7 @@ from __future__ import annotations
 
 import os
 import weakref
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -46,60 +54,80 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 def build_session(
     app_name: str = "lab5-lakehouse-etl-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
 ) -> SparkSession:
     """Create (or fetch) a SparkSession tuned for this engine.
 
     On the test box we run ``local[N]``; on a real cluster the same
-    configs hold — AQE coalesces the 200-default shuffle partitions to
-    match actual data volume, so ``shuffle_partitions`` is a ceiling,
-    not a hand-tuned constant.
+    configs hold.  The session-scoped settings come from :func:`tune`,
+    the same call every registered query makes on the driver's session.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # INT64 micros instead of the deprecated INT96: INT96 columns
-        # carry no usable parquet min/max statistics, which silently
-        # disables footer stats → manifest data skipping for TIMESTAMP
-        # (LTZ) columns written through LakeTable
-        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )
-    return builder.getOrCreate()
+    return tune(builder.getOrCreate())
 
 
 def tune(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable configs to a session we did not build.
+    """Pin the session-scoped settings every declared query relies on.
 
-    The correctness driver constructs its own SparkSession; these are
-    the session-scoped settings our declared queries rely on. Timezone
-    is the critical one — the DuckDB oracle reads parquet timestamps as
-    naive UTC, so Spark must collect them in UTC too. Shuffle
-    partitions: AQE coalesces batch shuffles, but Structured Streaming
-    state stores get NO adaptive coalescing — a vanilla session's 200
-    default partitions means 200 state-store tasks per micro-batch, so
-    size it to the machine (fresh checkpoints each run, so re-sizing is
-    safe; a production stream with a retained checkpoint must keep its
-    original partition count).
+    The correctness driver constructs its own SparkSession, so the
+    ``query()`` decorator runs this before each registered query and
+    :func:`build_session` runs it once; nothing else sets these keys.
+
+    - Timezone UTC: the DuckDB oracle reads parquet timestamps as naive
+      UTC, so Spark must collect them in UTC too.
+    - Shuffle partitions = ``SPARK_GRAFT_CPUS``: sized to the machine
+      instead of a vanilla session's 200; AQE coalesces batch shuffles
+      below it, and stream drains narrow it for their state stores
+      (``streaming.events._drain``).
+    - TIMESTAMP_MICROS output instead of the deprecated INT96: INT96
+      columns carry no usable parquet min/max statistics, which
+      silently disables footer stats, and so manifest data skipping,
+      for TIMESTAMP columns written through LakeTable.
+    - nanosAsLong: ``events.ts`` has shipped as parquet
+      TIMESTAMP(NANOS), which Spark's reader rejects
+      (PARQUET_TYPE_ILLEGAL) unless the column is read as a long;
+      :func:`load_table` and ``read_events_stream`` rebuild the
+      microsecond timestamp from it.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark.conf.set("spark.sql.shuffle.partitions", cpus)
-    # see build_session: INT96 timestamps have no parquet stats, which
-    # disables manifest data skipping on TIMESTAMP columns
     spark.conf.set(
-        "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
+        "spark.sql.shuffle.partitions", os.environ.get("SPARK_GRAFT_CPUS", "32")
     )
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     return spark
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, settings: dict[str, str]):
+    """Set ``settings`` on ``spark`` for the body of the ``with`` block,
+    then restore each key: the previous value where one was set, unset
+    where none was, so the session's confs read as before.
+
+    The confs are session-global: a query running concurrently on the
+    SAME session sees them while the block runs.  Callers that need
+    isolation run in their own ``spark.newSession()``."""
+    before = spark.conf.getAll
+    for k, v in settings.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k in settings:
+            if k in before:
+                spark.conf.set(k, before[k])
+            else:
+                spark.conf.unset(k)
 
 
 def scratch_dir(*parts: str, fresh: bool = False) -> str:
@@ -230,21 +258,20 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     `events.ts` has shipped as either parquet TIMESTAMP(NANOS) or
     TIMESTAMP(MICROS) depending on the generator run. Spark's reader
     rejects nanos (PARQUET_TYPE_ILLEGAL — Spark timestamps are µs)
-    unless the legacy conf reads them as long, so we set the conf and
-    branch on the landed type: long → rebuild the µs timestamp with
+    unless the legacy conf reads them as long, which :func:`tune` sets
+    (every registered query runs under it), so this branches on the
+    landed type: long → rebuild the µs timestamp with
     FLOOR integer division (NOT float division — ns epoch values
     ~1.7e18 exceed double's 2^53 integer range; and not bare `div`,
     which truncates toward zero: DuckDB's ns→µs conversion FLOORS, so
     a pre-epoch nanosecond timestamp under `div` would land one µs
     later than the oracle and than the MICROS encoding of the same
-    instant — measured: DuckDB maps -1500 ns to -2 µs; r10 review); timestamp/timestamp_ntz → cast to the
-    session-local TIMESTAMP (a no-op under the pinned UTC timezone),
-    so every downstream query sees one stable TIMESTAMP type.
+    instant — measured: DuckDB maps -1500 ns to -2 µs; r10 review);
+    timestamp/timestamp_ntz → cast to the session-local TIMESTAMP (a
+    no-op under the pinned UTC timezone), so every downstream query
+    sees one stable TIMESTAMP type.
     """
-    tune(spark)
     path = table_path(sf_dir, name)
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = parquet_schema(spark, path)
     df = spark.read.schema(schema).parquet(path)
     if name != "events":

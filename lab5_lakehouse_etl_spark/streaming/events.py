@@ -22,14 +22,14 @@ from __future__ import annotations
 import hashlib
 import os
 import tempfile
-from contextlib import contextmanager
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..lakehouse import LakeTable
-from ..session import parquet_schema
+from ..lakehouse.table import ConcurrentWriteError
+from ..session import parquet_schema, scoped_conf
 
 #: State partitions for the drains below.  Streaming state partitions
 #: are frozen at a checkpoint's first batch from
@@ -42,58 +42,61 @@ from ..session import parquet_schema
 #: Production guidance is to size state partitions to state VOLUME
 #: (~100 MB-1 GB per partition), not to the batch shuffle width; 8 is
 #: generous for the bench corpus and the knob is explicit where a real
-#: deployment would raise it.
+#: deployment would raise it.  The drains use fresh checkpoints, so
+#: re-sizing is safe; a production stream with a retained checkpoint
+#: must keep its original partition count.
 STATE_PARTITIONS = 8
 
-
-@contextmanager
-def _state_sized_shuffle(spark: SparkSession, n: int = STATE_PARTITIONS):
-    """Scope spark.sql.shuffle.partitions = n around a streaming drain
-    (the value is captured into the checkpoint at first batch; batch
-    queries re-tune() their own width, so scoping here cannot leak).
-
-    CONCURRENCY: this mutates the SESSION-global conf and restores it
-    in ``finally`` — safe for the drain helpers' intended use (one
-    drain at a time per SparkSession, the bench/driver shape), but a
-    concurrent query on the SAME session can observe the narrowed
-    width or race the restore.  Concurrent callers should scope the
-    setting per-query instead: run each drain in its own
-    ``spark.newSession()`` (confs are session-local there) or set the
-    width via the stream's own ``option("spark.sql.shuffle.
-    partitions", ...)`` where the source supports it."""
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
+#: Confs every drain runs under (:func:`_drain`).  The state width is
+#: STATE_PARTITIONS.  AQE is off because it materializes every exchange
+#: of the per-batch plan as its own query-stage SUB-JOB to re-plan
+#: downstream stages — measured on the q_stream_neardup drain at ~29
+#: scheduler jobs per micro-batch for a probe+verify plan with nothing
+#: for AQE to decide (the shuffle width is pinned, the relations are
+#: batch-sized, skew handling has no 256 MB-scale partitions to split).
+#: At micro-batch scale the per-stage scheduling/planning overhead
+#: dominates the work; with AQE off the same plan runs as a handful of
+#: jobs.
+_DRAIN_CONFS = {
+    "spark.sql.shuffle.partitions": str(STATE_PARTITIONS),
+    "spark.sql.adaptive.enabled": "false",
+}
 
 
-@contextmanager
-def _micro_batch_aqe_pinned(spark: SparkSession):
-    """Scope spark.sql.adaptive.enabled = false around a foreachBatch
-    drain whose per-batch plan is already explicitly sized (pinned
-    state-width shuffles, O(batch) relations).
+def _drain(spark: SparkSession, writer):
+    """Run ``writer`` (a configured ``DataStreamWriter``) with
+    ``trigger(availableNow=True)`` until the source is drained, under
+    :data:`_DRAIN_CONFS` scoped to the drain (``session.scoped_conf``:
+    the session's confs read as before once it returns); returns the
+    finished ``StreamingQuery``."""
+    with scoped_conf(spark, _DRAIN_CONFS):
+        q = writer.trigger(availableNow=True).start()
+        q.awaitTermination()
+    return q
 
-    Why: AQE materializes every exchange of the per-batch plan as its
-    own query-stage SUB-JOB to re-plan downstream stages — measured on
-    the q_stream_neardup drain at ~29 scheduler jobs per micro-batch
-    for a probe+verify plan with nothing for AQE to decide (the
-    shuffle width is pinned by _state_sized_shuffle, the relations are
-    batch-sized, skew handling has no 256 MB-scale partitions to
-    split).  At micro-batch scale the per-stage scheduling/planning
-    overhead dominates the work; with AQE off the same plan runs as a
-    handful of jobs.  Scoped and restored like _state_sized_shuffle
-    (same concurrency caveat); batch queries re-tune() their own
-    session, so nothing leaks."""
-    key = "spark.sql.adaptive.enabled"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
+
+def _land(table_path: str, write):
+    """foreachBatch body that lands each non-empty micro-batch in the
+    LakeTable at ``table_path``: ``write(table, batch_df)`` once the
+    table exists, ``LakeTable.create`` for the first batch.  Losing an
+    optimistic-concurrency race (``ConcurrentWriteError``) is retried,
+    3 attempts in all: the write re-reads the winner's snapshot."""
+
+    def land(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        for attempt in range(3):
+            try:
+                if LakeTable.is_table(table_path):
+                    write(LakeTable(table_path), batch_df)
+                else:
+                    LakeTable.create(batch_df, table_path)
+                return
+            except ConcurrentWriteError:
+                if attempt == 2:
+                    raise
+
+    return land
 
 
 def _events_schema_ddl(ts_type: str) -> str:
@@ -130,8 +133,9 @@ def _as_stream_dir(path: str) -> str:
 
 def read_events_stream(spark: SparkSession, path: str) -> DataFrame:
     """File-source replay of the events parquet (schema must be
-    declared for streaming reads; maxFilesPerTrigger throttles replay)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    declared for streaming reads; maxFilesPerTrigger throttles replay).
+    A TIMESTAMP(NANOS) ``ts`` reads as a long under the nanosAsLong conf
+    ``session.tune`` sets, and is rebuilt as µs like ``load_table``'s."""
     # streaming sources need a declared schema — the ts encoding of this
     # fixture generation comes from the session's memoized batch schema
     # (the same entry load_table's events branch uses), so only the
@@ -171,16 +175,6 @@ def tumbling_counts(events: DataFrame, width: str = "10 minutes") -> DataFrame:
             "n_events",
             "sum_value",
         )
-    )
-
-
-def sliding_avg(events: DataFrame) -> DataFrame:
-    """Sliding window (10 min window, 5 min slide) average value."""
-    return (
-        events.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"), "event_type")
-        .agg(F.round(F.avg("value"), 4).alias("avg_value"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "avg_value")
     )
 
 
@@ -283,15 +277,10 @@ def run_to_memory(
     maxFilesPerTrigger=1 a multi-file input must produce one progress
     entry per file, so fewer means the source silently collapsed the
     replay and the query would be testing less than it claims."""
-    with _state_sized_shuffle(spark), _micro_batch_aqe_pinned(spark):
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    q = _drain(
+        spark,
+        df.writeStream.format("memory").queryName(name).outputMode(output_mode),
+    )
     if expect_min_batches is not None:
         n = sum(1 for p in q.recentProgress if p.numInputRows > 0)
         assert n >= expect_min_batches, (
@@ -316,34 +305,18 @@ def stream_agg_to_table(
     state lives in the (executor-side, RocksDB-backed at scale)
     stateful operator, results live in the table, and re-running the
     drain converges because each update row replaces its key's previous
-    cumulative value.  Same bounded ConcurrentWriteError retry as
+    cumulative value.  Lands through :func:`_land` like
     :func:`stream_merge_to_table` (latest-wins is unnecessary — update
     rows are unique per key within a batch by construction)."""
-    from ..lakehouse.table import ConcurrentWriteError
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        for attempt in range(3):
-            try:
-                if LakeTable.is_table(table_path):
-                    LakeTable(table_path).merge(spark, batch_df, key=key)
-                else:
-                    LakeTable.create(batch_df, table_path)
-                return
-            except ConcurrentWriteError:
-                if attempt == 2:
-                    raise
-
-    with _state_sized_shuffle(spark), _micro_batch_aqe_pinned(spark):
-        q = (
-            agg_df.writeStream.foreachBatch(upsert)
-            .outputMode("update")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    upsert = _land(
+        table_path, lambda table, batch: table.merge(spark, batch, key=key)
+    )
+    _drain(
+        spark,
+        agg_df.writeStream.foreachBatch(upsert)
+        .outputMode("update")
+        .option("checkpointLocation", checkpoint_dir),
+    )
     return LakeTable(table_path)
 
 
@@ -373,31 +346,13 @@ def stream_sessions_to_table(
     readers time-travel to any earlier batch's complete result or
     read latest — retention (``retain_versions``) bounds how far
     back."""
-    from ..lakehouse.table import ConcurrentWriteError
-
-    def overwrite(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        for attempt in range(3):
-            try:
-                if LakeTable.is_table(table_path):
-                    LakeTable(table_path).overwrite(batch_df)
-                else:
-                    LakeTable.create(batch_df, table_path)
-                return
-            except ConcurrentWriteError:
-                if attempt == 2:
-                    raise
-
-    with _state_sized_shuffle(spark), _micro_batch_aqe_pinned(spark):
-        q = (
-            session_df.writeStream.foreachBatch(overwrite)
-            .outputMode("complete")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    overwrite = _land(table_path, lambda table, batch: table.overwrite(batch))
+    _drain(
+        spark,
+        session_df.writeStream.foreachBatch(overwrite)
+        .outputMode("complete")
+        .option("checkpointLocation", checkpoint_dir),
+    )
     return LakeTable(table_path)
 
 
@@ -615,14 +570,12 @@ def stream_neardup_gate(
         spark.catalog.clearCache()
 
     t0, j0 = time.monotonic(), job_count(spark)
-    with _state_sized_shuffle(spark), _micro_batch_aqe_pinned(spark):
-        q = (
-            docs_stream.writeStream.foreachBatch(gate)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(
+        spark,
+        docs_stream.writeStream.foreachBatch(gate).option(
+            "checkpointLocation", checkpoint_dir
+        ),
+    )
     if phases is not None:
         phases["drain_sec"] = round(time.monotonic() - t0, 3)
         phases["drain_jobs"] = job_count(spark) - j0
@@ -665,14 +618,12 @@ def stream_decontaminate_gate(
             .parquet(f"{out_path}/batch_{batch_id}")
         )
 
-    with _state_sized_shuffle(spark), _micro_batch_aqe_pinned(spark):
-        q = (
-            docs_stream.writeStream.foreachBatch(gate)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(
+        spark,
+        docs_stream.writeStream.foreachBatch(gate).option(
+            "checkpointLocation", checkpoint_dir
+        ),
+    )
 
 
 def stream_merge_to_table(
@@ -690,32 +641,18 @@ def stream_merge_to_table(
     OPTIMIZE job) is retried: merge re-reads the winner's snapshot, and
     latest-wins makes the replay order-insensitive, so a bounded retry
     is exactly-once safe."""
-    from ..lakehouse.table import ConcurrentWriteError
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        for attempt in range(3):
-            try:
-                if LakeTable.is_table(table_path):
-                    LakeTable(table_path).merge(
-                        spark, batch_df, key=["event_id"], latest_by="ts"
-                    )
-                else:
-                    LakeTable.create(batch_df, table_path)
-                return
-            except ConcurrentWriteError:
-                if attempt == 2:
-                    raise
-
-    with _state_sized_shuffle(spark), _micro_batch_aqe_pinned(spark):
-        q = (
-            events.writeStream.foreachBatch(upsert)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    upsert = _land(
+        table_path,
+        lambda table, batch: table.merge(
+            spark, batch, key=["event_id"], latest_by="ts"
+        ),
+    )
+    _drain(
+        spark,
+        events.writeStream.foreachBatch(upsert).option(
+            "checkpointLocation", checkpoint_dir
+        ),
+    )
     return LakeTable(table_path)
 
 
@@ -757,12 +694,10 @@ def stream_warc_gate(
             .parquet(f"{out_path}/batch_{batch_id}")
         )
 
-    with _state_sized_shuffle(spark), _micro_batch_aqe_pinned(spark):
-        q = (
-            files_stream.writeStream.foreachBatch(gate)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(
+        spark,
+        files_stream.writeStream.foreachBatch(gate).option(
+            "checkpointLocation", checkpoint_dir
+        ),
+    )
     return batches_seen["n"]

@@ -19,7 +19,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = build_session("lab5-tests", shuffle_partitions=8)
+    s = build_session("lab5-tests")
     yield s
     s.stop()
 

@@ -13,6 +13,12 @@ prefix), and runs in ONE
 process so cross-query breakage (e.g. the round-3 DECIMAL footer-stats
 regression only q_mv_incremental exposed) surfaces.
 
+It also checks that queries leave the session's confs alone: after the
+first query (whose ``session.tune`` pins the engine's settings) it
+snapshots ``spark.conf.getAll``, and any later query after which the
+snapshot differs is reported as ``CONF DRIFT`` and counted as a
+failure.
+
 Usage:
     python tools/preverify.py                 # full registry at sf0.01
     python tools/preverify.py --window        # first 50 (driver window)
@@ -73,7 +79,8 @@ def main() -> int:
     names = picked or list(ordered_queries())
     if "--window" in sys.argv and not picked:
         names = names[:50]
-    fails = 0
+    fails = drifts = 0
+    confs = None
     for i, name in enumerate(names):
         try:
             df = qs[name](spark, sf_dir)
@@ -95,6 +102,19 @@ def main() -> int:
                 f" {type(ex).__name__}: {str(ex)[:200]}",
                 flush=True,
             )
+        now = spark.conf.getAll
+        if confs is not None and now != confs:
+            drifts += 1
+            changed = {
+                k: (confs.get(k), now.get(k))
+                for k in sorted(confs.keys() | now.keys())
+                if confs.get(k) != now.get(k)
+            }
+            print(f"[{i + 1}/{len(names)}] {name} CONF DRIFT {changed}",
+                  flush=True)
+        confs = now
+    print("conf drift:", drifts)
+    fails += drifts
     print("failures:", fails)
     spark.stop()
     return fails

@@ -183,7 +183,7 @@ def run() -> None:
     from lab5_lakehouse_etl_spark.session import build_session
 
     Q.load_all()
-    spark = build_session("scale-stress", shuffle_partitions=32)
+    spark = build_session("scale-stress")
     with open(os.path.join(REPO, "bench_detail.json")) as fh:
         base = json.load(fh)["queries"]
 
@@ -266,7 +266,7 @@ def banding_crossover() -> None:
         )
         return path
 
-    spark = build_session("banding-crossover", shuffle_partitions=32)
+    spark = build_session("banding-crossover")
     print("n_docs  tier       wall_s  verified_pairs", flush=True)
     for n in sizes:
         path = gen(n)
@@ -311,7 +311,7 @@ def append_slope() -> None:
     from lab5_lakehouse_etl_spark.lakehouse import LakeTable
     from lab5_lakehouse_etl_spark.session import build_session
 
-    spark = build_session("append-slope", shuffle_partitions=32)
+    spark = build_session("append-slope")
     spark.sparkContext.setLogLevel("ERROR")
 
     def check_no_rebuild(t: LakeTable) -> str:
